@@ -79,6 +79,18 @@ def test_cas_batch_guard_replay(spark, tmp_path):
     man = read_manifest(out)
     assert set(man["batches"]) == {"1", "2"} and man["batches"]["2"] == recs2
 
+    # the skip keys on exact membership: an id below the highest recorded
+    # one but absent from the manifest (a gap, or a fresh checkpoint
+    # restarting at 0) is exported and recorded, not looked up
+    for case, recorded, bid in (("gap", [0, 2], 1), ("fresh_cp", [5], 0)):
+        out_c = str(tmp_path / case)
+        for b in recorded:
+            cas_export(_docs(spark, 10), out_c, "day", batch_id=b)
+        got = cas_export(df.filter(F.col("k") >= 40), out_c, "day", batch_id=bid)
+        man = read_manifest(out_c)
+        assert got and man["batches"][str(bid)] == got, case
+        assert set(man["batches"]) == {str(b) for b in recorded + [bid]}, case
+
 
 def test_relay_cas_sink_e2e(spark, tmp_path):
     p = GenParams(n_events=1500, n_repos=8, n_files=4)

@@ -61,12 +61,14 @@ def test_row_level_exit_codes(spark):
         ("bad_int", "c1", "x|2"),      # exit 2
         ("div0", "c1", "84|0"),        # exit 4
         ("short", "c1", "84"),         # exit 5 (missing field)
+        ("no_code", None, "84|2"),     # exit 11 (null code_hash)
     ])
     out = _collect(run_get_method(df, REG, "ratio", 1), "out_0", "vm_exit_code")
     assert out["ok"] == ("42", 0)
     assert out["bad_int"] == (None, 2)
     assert out["div0"] == (None, 4)
     assert out["short"] == (None, 5)
+    assert out["no_code"] == (None, 11)
 
 
 def test_floor_division_negative(spark):

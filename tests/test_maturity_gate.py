@@ -71,6 +71,9 @@ def test_gate_replay_matches_oracle_without_barriers(spark, tmp_path):
     expected, _ = oracle_state(events)
     got = table_state(table)
     assert got == expected
+    # the end-of-log flush is an apply like any other: counted, so CLI
+    # `stream --maturity` reports every batch it appended
+    assert pipe.batches_applied == len(pipe.batch_results)
 
 
 def test_gate_resume_after_kill(spark, tmp_path):

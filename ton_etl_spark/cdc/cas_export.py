@@ -61,9 +61,10 @@ def cas_export(
 
     Returns the file records `[{partition, sha, rows}, ...]` (also
     appended to `_cas_manifest.json` when `batch_id` is given; a
-    batch_id at or below the committed high-water mark is skipped
-    entirely and its recorded files are returned — exactly-once under
-    redelivery, same contract as LakeTable merges).
+    batch_id already recorded there is skipped entirely and its recorded
+    files are returned — exactly-once under redelivery. The skip keys on
+    exact membership, not a high-water mark, so a gap or a fresh
+    checkpoint's lower ids still export).
 
     Plan shape: one groupBy-exchange on the partition column with
     applyInPandas (NOT mapInPandas: Arrow's record-batch splitting
@@ -76,10 +77,9 @@ def cas_export(
     buffer has (datalake/main.py:139), except here per-date, and the
     row-chunked writes keep the serialized buffer bounded."""
     if batch_id is not None:
-        man = read_manifest(out_dir)
-        committed = max((int(b) for b in man["batches"]), default=-1)
-        if batch_id <= committed:
-            return man["batches"][str(batch_id)]
+        done = read_manifest(out_dir)["batches"].get(str(batch_id))
+        if done is not None:
+            return done
 
     os.makedirs(out_dir, exist_ok=True)
     cols = df.columns

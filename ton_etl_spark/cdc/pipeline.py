@@ -50,8 +50,7 @@ def _apply_ddl(table: LakeTable, ddl_rows: list) -> list[str]:
 # key-set). Rename chains are DDL-rare and components are small; a
 # component that exceeds this is adversarial or misconfigured, and the
 # resolver fails loudly inside the task rather than silently building a
-# giant pandas frame (VERDICT r3 "What's wrong" #4 — formerly a bound on
-# a driver-side collect; the collect itself is gone).
+# giant pandas frame.
 MAX_CHAIN_PROVENANCE_ROWS = 1_000_000
 
 
@@ -161,7 +160,6 @@ def _rename_candidates(
     table: LakeTable,
     in_batch_upserts: DataFrame,
     in_batch_deletes: DataFrame,
-    data_cols: list[str],
     old_keys_df: DataFrame,
     buckets: list[int],
 ) -> DataFrame:
@@ -201,9 +199,9 @@ def _resolve_renames(
     in_batch_upserts: DataFrame | None,
     in_batch_deletes: DataFrame | None,
     data_cols: list[str],
-    old_key_buckets: list[int] | None = None,
-    old_keys_df: DataFrame | None = None,
-) -> tuple[DataFrame | None, list[dict], int]:
+    old_key_buckets: list[int],
+    old_keys_df: DataFrame | None,
+) -> tuple[DataFrame | None, int, list[DataFrame]]:
     """Rename resolution.
 
     A rename moves the old key's current content to the new key — a
@@ -238,20 +236,8 @@ def _resolve_renames(
         return None, 0, []
 
     simple, chained = _split_chained(renames)
-    if old_keys_df is None:
-        old_keys_df = spark.createDataFrame(
-            sorted({(r["repo"], r["path"]) for r in renames}),
-            "repo string, path string",
-        )
-    if old_key_buckets is None:
-        old_key_buckets = [
-            r["_b"]
-            for r in old_keys_df.withColumn("_b", table.bucket_expr())
-            .select("_b").distinct().collect()
-        ]
     cand = _rename_candidates(
-        table, in_batch_upserts, in_batch_deletes, data_cols,
-        old_keys_df, old_key_buckets,
+        table, in_batch_upserts, in_batch_deletes, old_keys_df, old_key_buckets
     )
     # cand is referenced up to three times per batch (simple-winner
     # join, chain-resolver input, moved-content join) and each
@@ -307,10 +293,7 @@ def _resolve_renames(
         # (repo, path, lsn) source triple, which chains carry forward
         # through the overlay; the moved rows' content is then fetched
         # with one broadcast join of the tiny mapping against the
-        # candidates. (The r3 design collected narrow provenance rows
-        # to the driver per batch: one extra blocking job whose scan +
-        # serial gather was the worst-scaling stage of the pipeline —
-        # 1.7x at 4 cores vs 3.4x for the merge.)
+        # candidates.
         comp_parent: dict[tuple, tuple] = {}
 
         def _find(x: tuple) -> tuple:
@@ -410,7 +393,6 @@ def apply_batch(
     batch_id: int | None = None,
     registry: ParserRegistry | None = None,
     monitor: HotKeyMonitor | None = None,
-    collect_stats: bool = True,
     fanout=None,       # cdc.silver.SilverFanout
     gold=None,         # gold maintainer (GoldDecayedPrice/GoldAssetTvl) or list
     blacklist=None,    # cdc.blacklist.LearnedBlacklist
@@ -418,12 +400,6 @@ def apply_batch(
     gated: bool = False,             # events carry an immature tail to defer
 ) -> dict:
     t0 = time.time()
-    timings: dict[str, int] = {}
-
-    def mark(name: str, since: float) -> float:
-        timings[name] = timings.get(name, 0) + int((time.time() - since) * 1000)
-        return time.time()
-
     m = table.manifest()
     replayed = batch_id is not None and batch_id <= m["batch_id"]
     if replayed:
@@ -440,7 +416,6 @@ def apply_batch(
     #    schema_change events are global barriers in the log (WAL DDL
     #    is totally ordered), so every data event in this batch
     #    parses against the post-DDL schema.
-    t = time.time()
     # ONE aggregation job yields the whole control plane AND the batch
     # stats: DDL + rename rows (with the bucket ids of old and new keys
     # riding along), plus affected buckets / LSN range / row bound from
@@ -452,9 +427,8 @@ def apply_batch(
     # F5 maturity gate, fused into the control aggregation: every
     # evidence/control term below is conditioned on maturity, the
     # unconditioned max(lsn)/immature count ride the SAME aggregation
-    # (zero extra driver jobs vs. ungated — the r2 design ran a separate
-    # max-LSN probe job per batch), and the data path filters to the
-    # mature side right after the agg.
+    # (zero extra driver jobs vs. ungated), and the data path filters to
+    # the mature side right after the agg.
     if gated:
         mature = (
             F.lit(False)
@@ -518,13 +492,10 @@ def apply_batch(
             F.when(is_data, F.length("repo") + F.length("path"))
         ).alias("key_bytes_avg"),
         # structurally-malformed upserts (unparseable payload JSON),
-        # counted JVM-side in THIS aggregation. The old stats pass
-        # re-ran the entire Arrow zlib decode a second time per batch
-        # just to count `_malformed`; pyspark's Observation cannot
-        # replace it (its listener never fires for foreachBatch batch
-        # queries — verified deadlock). Codec-level failures on valid
-        # JSON (corrupt zlib payload) are still nulled+filtered by the
-        # parser but are not in this count.
+        # counted JVM-side in THIS aggregation (pyspark's Observation
+        # never fires for foreachBatch batch queries). Codec-level
+        # failures on valid JSON (corrupt zlib payload) are still
+        # nulled+filtered by the parser but are not in this count.
         F.count(F.when(is_up & bad_json, 1)).alias("n_malformed"),
         *bl_evidence,
         # which event types are present (skips fan-out work per batch)
@@ -565,7 +536,7 @@ def apply_batch(
             [r for r in (row0["_bl_bad"] or []) if r],
             [r for r in (row0["_bl_ok"] or []) if r],
             # replayed epochs / ungated pending re-flushes must not
-            # re-count the same malformed-only evidence (ADVICE r2)
+            # re-count the same malformed-only evidence
             None if replayed else batch_id,
             bad_capped=bl_capped,
         )
@@ -577,7 +548,6 @@ def apply_batch(
         if r["event_type"] == "schema_change" and r["payload"]
     ]
     applied_ddl = _apply_ddl(table, ddl)
-    t = mark("control_ms", t)
 
     cols = table.schema().fieldNames()
     lang_col = "language" if "language" in cols else "lang"
@@ -631,29 +601,14 @@ def apply_batch(
     else:
         old_keys_df = ups_ren = dels_ren = None
     synth_df, n_chained, ren_persisted = _resolve_renames(
-        spark, table, ren, ups_ren, dels_ren, data_cols,
-        old_key_buckets=ren_buckets, old_keys_df=old_keys_df,
+        spark, table, ren, ups_ren, dels_ren, data_cols, ren_buckets, old_keys_df
     )
-    t = mark("rename_ms", t)
     updates = ups_ok.unionByName(dels, allowMissingColumns=True)
     if synth_df is not None:
         updates = updates.unionByName(synth_df, allowMissingColumns=True)
 
     # 3. hot-key detection -> salted dedup
     salt = monitor.salt_for(events) if monitor is not None else None
-    t = mark("salt_ms", t)
-
-    stats = {}
-    if collect_stats:
-        stats = {
-            "n_events": row0["n"],            # from the control agg —
-            "n_malformed": row0["n_malformed"],  # no extra jobs at all
-            "n_renames": len(ren),
-            "n_chained_renames": n_chained,
-        }
-        if blacklist is not None:
-            stats["bl_bad_capped"] = bl_capped
-        t = mark("stats_ms", t)
 
     result = merge_into(
         table, updates, batch_id=batch_id, salt=salt, precomputed=precomputed
@@ -683,16 +638,17 @@ def apply_batch(
     if gres:
         result["gold"] = gres
 
-    mark("merge_ms", t)
-    timings["total_ms"] = int((time.time() - t0) * 1000)
     # absolute wall interval of this batch: benchmark CPU attribution
     # must sample the batch's REAL window, not one reconstructed from
-    # cumulative durations (stream startup + inter-batch bookkeeping
-    # make reconstructed windows drift earlier batch by batch)
+    # cumulative durations
     result.update(
-        ddl=applied_ddl, salt=salt, timings=timings,
-        t_wall=[t0, time.time()], **stats,
+        ddl=applied_ddl, salt=salt, t_wall=[t0, time.time()],
+        # batch stats come from the control aggregation: no extra jobs
+        n_events=row0["n"], n_malformed=row0["n_malformed"],
+        n_renames=len(ren), n_chained_renames=n_chained,
     )
+    if blacklist is not None:
+        result["bl_bad_capped"] = bl_capped
     if gated:
         result["lsn_max_seen"] = row0["_lsn_max_seen"]
         result["n_immature"] = row0["_n_immature"]
@@ -718,8 +674,7 @@ class _MaturityGate:
     new max rides the pipeline's control aggregation. A lagged cutoff is
     strictly MORE conservative (defers more), so the completeness
     invariant holds; the one-batch lag drains at end-of-log via
-    flush_pending. (The r2 design ran a dedicated max-LSN collect per
-    batch — one extra serial driver job per batch.)
+    flush_pending.
 
     Deferred events live in a tiny parquet pending store next to the
     checkpoint, advanced by an atomic JSON pointer swap
@@ -732,16 +687,12 @@ class _MaturityGate:
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, maturity: int):
-        import os
-
         self.spark = spark
         self.dir = state_dir
         self.maturity = maturity
         os.makedirs(state_dir, exist_ok=True)
 
     def _meta(self) -> dict:
-        import os
-
         p = os.path.join(self.dir, "_current")
         if not os.path.exists(p):
             return {
@@ -749,20 +700,7 @@ class _MaturityGate:
                 "batch_id": None, "cutoff_used": None,
             }
         with open(p) as f:
-            raw = f.read()
-        try:
-            return json.loads(raw)
-        except ValueError:
-            # legacy pointer format (bare tag string, pre-JSON): treat
-            # the store as non-empty with unknown stats so the pending
-            # set stays reachable; max_seen=None means no cutoff is
-            # certified until the next commit (strictly conservative)
-            tag = raw.strip() or None
-            return {
-                "tag": tag, "max_seen": None,
-                "n_pending": 1 if tag else 0,
-                "batch_id": None, "cutoff_used": None,
-            }
+            return json.load(f)
 
     def max_seen(self) -> int | None:
         return self._meta()["max_seen"]
@@ -776,8 +714,6 @@ class _MaturityGate:
         return None if mx is None else mx - self.maturity
 
     def read_pending(self) -> DataFrame | None:
-        import os
-
         meta = self._meta()
         if meta["tag"] is None or meta["n_pending"] == 0:
             return None
@@ -800,7 +736,6 @@ class _MaturityGate:
         (otherwise newly-mature events are both merge-skipped by the
         batch_id guard and dropped from pending — lost). Superseded v*
         dirs are GC'd after the swap."""
-        import os
         import shutil
         import uuid
 
@@ -846,12 +781,6 @@ class _MaturityGate:
             return meta.get("cutoff_used")
         return self.cutoff()
 
-    def clear(self) -> None:
-        """Empty the pending store after a successful end-of-log flush,
-        keeping max_seen (a repeated availableNow run must not re-apply
-        the drained set — ADVICE r2)."""
-        self.commit(None, None, self.max_seen(), 0)
-
 
 class CdcPipeline:
     """Streaming (and batch-replay) driver around apply_batch."""
@@ -863,15 +792,12 @@ class CdcPipeline:
         event_dir: str,
         checkpoint_dir: str,
         max_files_per_trigger: int = 4,
-        salt: int = 16,
-        collect_stats: bool = True,
         fanout=None,   # cdc.silver.SilverFanout
         gold=None,     # gold maintainer or list of maintainers
         source: str = "files",                      # 'files' | 'kafka'
         kafka_options: dict[str, str] | None = None,
         maturity: int | None = None,   # event-age gate in LSN units (F5)
         blacklist=None,  # cdc.blacklist.LearnedBlacklist (F7), opt-in
-        cache_batch: bool | None = None,  # persist each raw micro-batch
         novel_feed=None,  # cdc.curation.NovelContentFeed over this table
     ):
         # the rename-resolution layer is specialized to the (repo, path)
@@ -895,40 +821,19 @@ class CdcPipeline:
             if maturity is not None
             else None
         )
-        self.monitor = HotKeyMonitor(table.key_fields(), salt=salt)
-        self.collect_stats = collect_stats
+        self.monitor = HotKeyMonitor(table.key_fields())
         self.fanout = fanout
         self.gold = gold
         self.blacklist = blacklist
         self.batches_applied = 0
         self.batch_results: list[dict] = []
         self.fail_after: int | None = None  # test hook: crash injection
-        # persist each raw micro-batch once: apply_batch scans the batch
-        # 2-3x (control aggregation, rename provenance when renames are
-        # present, merge decode) and each un-cached scan re-reads +
-        # re-decompresses the source files. The cache stores the RAW
-        # events (payload still zlib'd) — the wide decoded projection is
-        # cached separately per batch (the rename candidate persist).
-        # None = env default (CDC_CACHE_BATCH, off unless set).
-        # Default OFF on measurement: interleaved 2x2 A/B at local[4],
-        # 6M events (BENCH.md 2026-08-19) — warm rate off 40.6/40.8k
-        # ev/s vs on 40.5/37.8k; memory-serializing 1M-row batches
-        # costs more than the re-scan it saves (source files sit in
-        # the OS page cache, so the repeat scans pay only decompress).
-        if cache_batch is None:
-            import os as _os
-            cache_batch = _os.environ.get("CDC_CACHE_BATCH") == "1"
-        self.cache_batch = cache_batch
-        # First-class curation sink (r4 verdict ask #6): a
-        # NovelContentFeed whose change-feed consumer tails THIS
-        # pipeline's table. After each micro-batch's main-table commit
-        # the feed drains inside the same foreachBatch epoch (source
-        # commit -> DedupIndex -> novel sink). Exactly-once does NOT
-        # lean on the streaming checkpoint: the feed's cursor, index
-        # batch guard, and sink merge guard each heal independently, so
-        # a kill between the main-table commit and any feed commit
-        # re-drains on the next epoch (or restart) with the same
-        # version-derived batch id — tested in test_curation_feed.
+        # Curation sink: a NovelContentFeed whose change-feed consumer
+        # tails THIS pipeline's table, drained after each apply. Its
+        # cursor, index batch guard and sink merge guard each heal
+        # independently, so a kill between the main-table commit and
+        # any feed commit re-drains on the next epoch (or restart) with
+        # the same version-derived batch id — tested in test_curation_feed.
         if novel_feed is not None and novel_feed.source.root != table.root:
             raise ValueError(
                 "novel_feed must consume this pipeline's table "
@@ -936,37 +841,35 @@ class CdcPipeline:
             )
         self.novel_feed = novel_feed
 
-    def _handle(self, batch_df: DataFrame, batch_id: int) -> None:
-        allev = cutoff = None
-        cached = None
-        if self.gate is not None:
-            pend = self.gate.read_pending()
-            allev = batch_df if pend is None else batch_df.unionByName(pend)
-            allev = allev.persist()
-            cutoff = self.gate.cutoff_for_batch(batch_id)
-            batch_df = allev
-        elif self.cache_batch:
-            cached = batch_df = batch_df.persist()
+    def _apply(
+        self, events: DataFrame, batch_id: int | None, cutoff: int | None = None
+    ) -> dict:
+        """The one apply path: apply_batch, the gate's pointer commit,
+        the curation-feed drain, bookkeeping, then the crash hook.
+        Streaming epochs of a gated pipeline split `events` at `cutoff`;
+        the end-of-log flush (batch_id None) applies its set whole."""
         res = apply_batch(
             self.spark,
             self.table,
-            batch_df,
+            events,
             batch_id=batch_id,
             monitor=self.monitor,
-            collect_stats=self.collect_stats,
             fanout=self.fanout,
             gold=self.gold,
             blacklist=self.blacklist,
             mature_lsn=cutoff,
-            gated=self.gate is not None,
+            gated=self.gate is not None and batch_id is not None,
         )
         if self.gate is not None:
-            # pointer swap only after every sink commit above succeeded
+            # pointer swap only after every sink commit above succeeded;
+            # an ungated flush defers nothing, which empties the store
+            # while keeping max_seen (a repeated availableNow run must
+            # not re-apply the drained set)
             n_imm = res.get("n_immature") or 0
             immature = (
-                allev.filter(F.col("lsn") > F.lit(cutoff))
+                events.filter(F.col("lsn") > F.lit(cutoff))
                 if cutoff is not None
-                else allev
+                else events
             )
             seen = [
                 x for x in (self.gate.max_seen(), res.get("lsn_max_seen"))
@@ -979,14 +882,11 @@ class CdcPipeline:
                 n_imm,
                 cutoff_used=cutoff,
             )
-            allev.unpersist()
-        if cached is not None:
-            cached.unpersist()
         if self.novel_feed is not None:
-            # drain the curation feed over the commit(s) this epoch just
-            # made — runs before the checkpoint records the batch, so a
-            # crash in here redelivers the batch and the feed's own
-            # guards replay/skip as needed
+            # drain the curation feed over the commit(s) this apply just
+            # made — before the checkpoint records the batch, so a crash
+            # in here redelivers the batch and the feed's own guards
+            # replay/skip as needed
             self.novel_feed.run()
         self.batch_results.append(res)
         self.batches_applied += 1
@@ -994,6 +894,19 @@ class CdcPipeline:
             # simulate a crash AFTER the sink committed but BEFORE the
             # checkpoint recorded the batch — the exactly-once razor's edge
             raise RuntimeError("injected crash after sink commit")
+        return res
+
+    def _handle(self, batch_df: DataFrame, batch_id: int) -> None:
+        if self.gate is None:
+            self._apply(batch_df, batch_id)
+            return
+        pend = self.gate.read_pending()
+        allev = batch_df if pend is None else batch_df.unionByName(pend)
+        allev = allev.persist()
+        try:
+            self._apply(allev, batch_id, self.gate.cutoff_for_batch(batch_id))
+        finally:
+            allev.unpersist()
 
     def run_streaming(
         self, available_now: bool = True, metrics_path: str | None = None
@@ -1028,36 +941,21 @@ class CdcPipeline:
         """Drain the maturity gate's deferred events at end-of-log
         (availableNow replay). Applied WITHOUT a batch_id: the merge's
         LSN guards + in-batch dedup make a repeated flush a no-op, so a
-        crash between apply and clear() is safe — and after the clear, a
-        repeated availableNow run skips the flush entirely with zero
-        jobs (n_pending lives in the pointer file)."""
+        crash between apply and the pointer swap is safe — and after the
+        swap, a repeated availableNow run skips the flush entirely with
+        zero jobs (n_pending lives in the pointer file)."""
         if self.gate is None or self.gate.n_pending() == 0:
             return None
         pend = self.gate.read_pending()
         if pend is None:
             return None
-        res = apply_batch(
-            self.spark,
-            self.table,
-            pend,
-            batch_id=None,
-            monitor=self.monitor,
-            collect_stats=self.collect_stats,
-            fanout=self.fanout,
-            gold=self.gold,
-            blacklist=self.blacklist,
-        )
-        self.gate.clear()
-        if self.novel_feed is not None:
-            self.novel_feed.run()
-        self.batch_results.append(res)
-        return res
+        return self._apply(pend, batch_id=None)
 
     def run_batch(self) -> dict:
         # one-shot batch replay reads the parquet log directly and
         # applies everything in a single ungated pass — a Kafka source
         # or a maturity gate would be silently ignored, so reject the
-        # combination instead (use run_streaming for both; ADVICE r2)
+        # combination instead (use run_streaming for both)
         if self.source != "files":
             raise ValueError(
                 f"run_batch reads the parquet event log; source="
@@ -1069,21 +967,4 @@ class CdcPipeline:
                 "maturity gate requires run_streaming()"
             )
         events = self.spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(self.event_dir)
-        res = apply_batch(
-            self.spark,
-            self.table,
-            events,
-            batch_id=None,
-            monitor=self.monitor,
-            collect_stats=self.collect_stats,
-            fanout=self.fanout,
-            gold=self.gold,
-            blacklist=self.blacklist,
-        )
-        if self.novel_feed is not None:
-            self.novel_feed.run()
-        # keep the applied-work counters consistent with streaming mode
-        # (the CLI's replay summary reported "batches": 0 otherwise)
-        self.batch_results.append(res)
-        self.batches_applied += 1
-        return res
+        return self._apply(events, batch_id=None)

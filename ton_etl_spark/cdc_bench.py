@@ -197,9 +197,6 @@ def main() -> None:
         spark, os.path.join(work, "lake"), REPOS_SCHEMA, REPOS_KEY_FIELDS,
         "lsn", bucket_count=max(cores * 4, 16),
     )
-    # collect_stats stays at the shipped default (True): stats are now
-    # observed inside the merge pass (no extra jobs), so the benched
-    # path IS the default path
     pipe = CdcPipeline(
         spark, table, log_dir, os.path.join(work, "cp"),
         max_files_per_trigger=mft,
@@ -233,8 +230,7 @@ def main() -> None:
     batches = [
         {
             "events": r.get("updated_keys", 0),
-            "ms": r["timings"]["total_ms"],
-            "stages": r["timings"],
+            "ms": int((r["t_wall"][1] - r["t_wall"][0]) * 1000),
             "agg_ms": r.get("agg_ms"),
             "write_ms": r.get("write_ms"),
             "_t_wall": r.get("t_wall"),
@@ -244,8 +240,8 @@ def main() -> None:
     ]
     # attach the host CPU mix per batch over the batch's RECORDED wall
     # interval (a cumulative reconstruction from t0 drifted earlier
-    # batch by batch — stream startup + inter-batch bookkeeping are not
-    # in total_ms — so steal landed on the wrong batches)
+    # batch by batch — stream startup + inter-batch bookkeeping are
+    # outside every batch — so steal landed on the wrong batches)
     for b in batches:
         tw = b.pop("_t_wall", None)
         b["host_cpu"] = sampler.window(tw[0], tw[1]) if tw else None

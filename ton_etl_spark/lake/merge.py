@@ -52,6 +52,25 @@ BROADCAST_BYTES_CAP = 256 * 1024 * 1024
 _KEY_ROW_OVERHEAD = 32  # per-row struct/offset overhead in the broadcast rel
 
 
+def _aligned_columns(table: LakeTable, m: dict, updates: DataFrame):
+    """(key, version-field, user data) column expressions over `updates`,
+    cast to the table's current schema in manifest order. Columns the
+    batch lacks (added mid-stream by schema evolution) become typed
+    nulls. The system `_deleted` column, last in manifest order, is left
+    to the caller. Callers put these in ONE select, not a withColumn
+    chain: every DataFrame op re-runs analysis over the whole tree on
+    the single driver thread."""
+    present = set(updates.columns)
+    cols = {
+        f.name: (F.col(f.name) if f.name in present else F.lit(None))
+        .cast(f.dataType).alias(f.name)
+        for f in table.schema().fields
+    }
+    keys, vf = m["key_fields"], m["version_field"]
+    data = [c for n, c in cols.items() if n not in keys and n != vf]
+    return [cols[k] for k in keys], cols[vf], data
+
+
 def dedup_updates(
     updates: DataFrame,
     keys: list[str],
@@ -129,38 +148,22 @@ def merge_into(
     all_cols = [f["name"] for f in m["fields"]]  # includes system _deleted
     data_cols = [c for c in all_cols if c not in keys and c != vf]
 
-    # align update columns to current schema (schema evolution may have
-    # added columns mid-stream; older events simply carry nulls). ONE
-    # select, not a withColumn chain: every PySpark DataFrame op re-runs
-    # analysis over the whole tree on the single driver thread — chained
-    # withColumns were a measurable serial per-batch cost.
-    schema = table.schema(include_system=True)
-    present = set(updates.columns)
-
-    def aligned_col(f):
-        base = F.col(f.name) if f.name in present else F.lit(None)
-        return base.cast(f.dataType).alias(f.name)
-
+    key_cols, vf_col, data = _aligned_columns(table, m, updates)
     op_rank = (
         F.col("_op_rank")
-        if "_op_rank" in present
+        if "_op_rank" in updates.columns
         else F.when(F.col("op") == "d", F.lit(3))
         .when(F.col("op") == "u", F.lit(2))
         .when(F.col("op") == "c", F.lit(1))
         .otherwise(F.lit(0))
     )
-    by_name = {f.name: f for f in schema.fields}
     aligned = updates.select(
-        *[aligned_col(by_name[k]) for k in keys],
-        aligned_col(by_name[vf]),
+        *key_cols,
+        vf_col,
         F.col("op").alias("op"),
         op_rank.alias("_op_rank"),
-        *[
-            (F.col("op") == "d").alias(c)
-            if c == "_deleted"
-            else aligned_col(by_name[c])
-            for c in data_cols
-        ],
+        *data,
+        (F.col("op") == "d").alias("_deleted"),
     )
 
     # partial (salted) dedup only: the merge aggregation below finishes
@@ -383,25 +386,9 @@ def append_insert(
     if batch_id is not None and batch_id <= m["batch_id"]:
         return {"skipped": True, "batch_id": batch_id, "version": m["version"]}
 
-    keys = m["key_fields"]
-    vf = m["version_field"]
-    all_cols = [f["name"] for f in m["fields"]]
-    data_cols = [c for c in all_cols if c not in keys and c != vf]
-    schema = table.schema(include_system=True)
-    present = set(updates.columns)
-    by_name = {f.name: f for f in schema.fields}
-
-    def aligned_col(f):
-        base = F.col(f.name) if f.name in present else F.lit(None)
-        return base.cast(f.dataType).alias(f.name)
-
+    key_cols, vf_col, data = _aligned_columns(table, m, updates)
     aligned = updates.select(
-        *[aligned_col(by_name[k]) for k in keys],
-        aligned_col(by_name[vf]),
-        *[
-            F.lit(False).alias(c) if c == "_deleted" else aligned_col(by_name[c])
-            for c in data_cols
-        ],
+        *key_cols, vf_col, *data, F.lit(False).alias("_deleted")
     ).withColumn("_bucket", table.bucket_expr(m))
 
     new_version = m["version"] + 1

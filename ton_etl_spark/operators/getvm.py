@@ -188,7 +188,7 @@ def run_get_method(
                 out_cols = [pd.Series(None, index=pdf.index, dtype="object")
                             for _ in range(n_out)]
                 exit_all = pd.Series(0, index=pdf.index, dtype="int32")
-                for ch, g in pdf.groupby(code_col, sort=False):
+                for ch, g in pdf.groupby(code_col, sort=False, dropna=False):
                     prog = registry.get(ch, {}).get(method)
                     if prog is None:
                         exit_all.loc[g.index] = NO_METHOD
