@@ -3,14 +3,17 @@
 parallelism levels (the in-sandbox proxy for N vs 4N executors,
 BASELINE.json north_rule).
 
-Prints ONE JSON line to stdout:
+Stdout carries only `summary_line` JSON lines (each under 1 KB): one
+after every paired CDC window and one last, so the final stdout line
+parses even if the run is cut short:
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...,
-   "cdc": {"events": N, "levels": {"1": {...}, "4": {...}},
-           "warm_scaling_efficiency": e, "state_parity": true}}
+   "paired_warm_scaling_efficiency": e, "paired_total_scaling_efficiency": e,
+   "median_eps": {"1": {"total": .., "warm": ..}, "4": {...}},
+   "state_parity": true, "windows": N}
 
-All progress chatter goes to stderr. Results are also appended to
-BENCH.md. Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
+The full results (per-query seconds, per-level statistics) go to
+.bench_cache/last_results.json and BENCH.md; progress chatter goes to
+stderr. Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
 BENCH_CDC_EVENTS (default 4M), BENCH_CDC_LEVELS, BENCH_CDC_REPEATS,
 BENCH_SKIP_CDC=1.
 """
@@ -209,6 +212,238 @@ def acquire_bench_lock():
     return fh  # keep open: lock lives as long as the process
 
 
+def cdc_stats(all_runs: dict[str, list]) -> dict:
+    """Per-level medians and paired per-window efficiencies over the
+    CDC runs so far (every level must have at least one run)."""
+    levels = {}
+    for cores in CDC_LEVELS:
+        runs = sorted(
+            all_runs[str(cores)],
+            key=lambda r: r["warm_events_per_sec"] or 0,
+        )
+        # batches/host_cpu shown from the median-by-warm run; the
+        # summary statistics are PER-METRIC medians across runs
+        # (a run can have a clean warm phase and a stalled batch 1,
+        # so tying total to the median-by-warm run conflates them)
+        med = dict(runs[len(runs) // 2])
+        med["n_runs"] = len(runs)
+
+        def _median(key):
+            # statistics.median: true even-count median (mean of the
+            # middle two) — vals[n//2] is the UPPER median and would
+            # bias every even-repeat statistic optimistically
+            import statistics
+
+            vals = [r[key] for r in runs if r.get(key) is not None]
+            return statistics.median(vals) if vals else None
+
+        med["warm_events_per_sec"] = _median("warm_events_per_sec")
+        med["events_per_sec"] = _median("events_per_sec")
+        med["wall_s"] = _median("wall_s")
+        med["warm_spread"] = [
+            runs[0]["warm_events_per_sec"],
+            runs[-1]["warm_events_per_sec"],
+        ]
+        med["total_spread"] = sorted(
+            r["events_per_sec"] for r in runs
+        )[:: max(len(runs) - 1, 1)]
+        # per-batch rate distribution pooled across ALL runs at this
+        # level, warm batches only (first batch of each run excluded):
+        # a host stall corrupts one batch, not a whole run's statistic
+        warm_batches = [
+            b
+            for r in runs
+            for b in r.get("batches", [])[1:]
+            if b.get("rate")
+        ]
+        pooled = sorted(b["rate"] for b in warm_batches)
+        if pooled:
+            n = len(pooled)
+            med["warm_batch_rates"] = {
+                "n": n,
+                "min": pooled[0],
+                "p25": pooled[n // 4],
+                "median": pooled[n // 2],
+                "p75": pooled[(3 * n) // 4],
+                "max": pooled[-1],
+            }
+        # "clean" = batches whose sampled host CPU shows <=2% steal
+        # AND whose own user+sys is >= 70% of the level's median
+        # (the second mode of hypervisor interference measured here
+        # shows ZERO guest-visible steal while our threads sit
+        # blocked — user% collapses with idle rising; e.g. a 26.7k
+        # batch among 43k siblings at user 8.7% vs 12.9% steady).
+        # Both are MEASURED-interference criteria on the host CPU
+        # mix, never result-value cuts. Excluded counts are always
+        # reported (no silent caps).
+        with_cpu = [b for b in warm_batches if b.get("host_cpu")]
+        busys = sorted(
+            b["host_cpu"].get("user", 0.0) + b["host_cpu"].get("sys", 0.0)
+            for b in with_cpu
+        )
+        med_busy = busys[len(busys) // 2] if busys else 0.0
+        clean = sorted(
+            b["rate"]
+            for b in with_cpu
+            if b["host_cpu"].get("steal", 0.0) <= 2.0
+            and (
+                b["host_cpu"].get("user", 0.0)
+                + b["host_cpu"].get("sys", 0.0)
+                >= 0.7 * med_busy
+            )
+        )
+        if with_cpu:
+            med["clean_batch_rates"] = {
+                "n": len(clean),
+                "excluded_stalled": len(with_cpu) - len(clean),
+                "median": clean[len(clean) // 2] if clean else None,
+            }
+        levels[str(cores)] = med
+    for med in levels.values():
+        med.pop("batches", None)
+    lo, hi = (levels[str(c)] for c in CDC_LEVELS)
+    ideal = CDC_LEVELS[1] / CDC_LEVELS[0]
+    warm_ratio = hi["warm_events_per_sec"] / lo["warm_events_per_sec"]
+    total_ratio = hi["events_per_sec"] / lo["events_per_sec"]
+
+    # PAIRED per-window ratios: the median-of-rates statistic divides
+    # medians that may come from different noise windows. Each
+    # interleaved repeat is one window: its local[N] and local[4N]
+    # runs are temporally adjacent, so host drift cancels inside the
+    # ratio.
+    # Median of those per-window ratios is the primary efficiency
+    # statistic; the unpaired medians stay reported for continuity.
+    n_windows = min(len(all_runs[str(c)]) for c in CDC_LEVELS)
+
+    def _paired(key):
+        ratios = []
+        for rep in range(n_windows):
+            a = all_runs[str(CDC_LEVELS[0])][rep].get(key)
+            b = all_runs[str(CDC_LEVELS[1])][rep].get(key)
+            if a and b:
+                ratios.append(b / a)
+        ratios.sort()
+        return ratios
+
+    def _mid(ratios):
+        # true median (even count -> mean of middle two); the
+        # default repeat count is odd so a single window is the
+        # middle, but an env override must not shift the statistic
+        # to the upper median
+        import statistics
+
+        return statistics.median(ratios) if ratios else None
+
+    paired_warm = _paired("warm_events_per_sec")
+    paired_total = _paired("events_per_sec")
+    # per-window BATCH-median ratio: median warm-batch rate within
+    # each window per level, then the ratio — robust to a single
+    # stalled batch inside an otherwise clean window
+    paired_batch = []
+    for rep in range(n_windows):
+        pair = []
+        for c in CDC_LEVELS:
+            rates = sorted(
+                b["rate"]
+                for b in all_runs[str(c)][rep].get("batches", [])[1:]
+                if b.get("rate")
+            )
+            pair.append(rates[len(rates) // 2] if rates else None)
+        if pair[0] and pair[1]:
+            paired_batch.append(pair[1] / pair[0])
+    paired_batch.sort()
+    batch_ratio = None
+    if lo.get("warm_batch_rates") and hi.get("warm_batch_rates"):
+        batch_ratio = (
+            hi["warm_batch_rates"]["median"]
+            / lo["warm_batch_rates"]["median"]
+        )
+    shas = {r["state_sha"] for rs in all_runs.values() for r in rs}
+    cdc = {
+        "events": lo["n_events"],
+        "levels": levels,
+        "ideal": ideal,
+        "repeats": CDC_REPEATS,
+        "stat": "median, interleaved",
+        "windows": n_windows,
+        "warm_speedup": round(warm_ratio, 3),
+        "warm_scaling_efficiency": round(warm_ratio / ideal, 3),
+        "total_speedup": round(total_ratio, 3),
+        "total_scaling_efficiency": round(total_ratio / ideal, 3),
+        # primary statistic: median of per-window paired ratios
+        # (see comment above) — each entry is one interleaved
+        # window's local[4N]/local[N] from adjacent runs
+        "paired_warm_ratios": [round(r, 3) for r in paired_warm],
+        "paired_total_ratios": [round(r, 3) for r in paired_total],
+        "paired_warm_scaling_efficiency": round(
+            _mid(paired_warm) / ideal, 3
+        ) if paired_warm else None,
+        "paired_total_scaling_efficiency": round(
+            _mid(paired_total) / ideal, 3
+        ) if paired_total else None,
+        "paired_batch_median_scaling_efficiency": round(
+            _mid(paired_batch) / ideal, 3
+        ) if paired_batch else None,
+        "state_parity": len(shas) == 1,  # across EVERY run, both levels
+        # pre/post single-thread CPU probe per run per level —
+        # direct evidence of hypervisor contention in each run's
+        # window (reported, never used to adjust any statistic)
+        "calib_s": {
+            str(c): [r.get("calib_s") for r in all_runs[str(c)]]
+            for c in CDC_LEVELS
+        },
+    }
+    if batch_ratio is not None:
+        cdc["batch_median_speedup"] = round(batch_ratio, 3)
+        cdc["batch_median_scaling_efficiency"] = round(
+            batch_ratio / ideal, 3
+        )
+    lo_clean = lo.get("clean_batch_rates") or {}
+    hi_clean = hi.get("clean_batch_rates") or {}
+    if lo_clean.get("median") and hi_clean.get("median"):
+        clean_ratio = hi_clean["median"] / lo_clean["median"]
+        cdc["clean_batch_median_scaling_efficiency"] = round(
+            clean_ratio / ideal, 3
+        )
+        cdc["stalled_batches_excluded"] = [
+            lo_clean.get("excluded_stalled", 0),
+            hi_clean.get("excluded_stalled", 0),
+        ]
+    return cdc
+
+
+def summary_line(results: dict) -> str:
+    """The bench's one-line JSON summary (under 1 KB): the headline value,
+    the paired efficiencies, the median ev/s per level, state parity and
+    the window count. A parser that keeps only the tail of stdout reads
+    this; the full results go to a file."""
+    cdc = results.get("cdc") or {}
+    return json.dumps({
+        "metric": results.get("metric"),
+        "value": results.get("value"),
+        "unit": results.get("unit"),
+        "paired_warm_scaling_efficiency": cdc.get("paired_warm_scaling_efficiency"),
+        "paired_total_scaling_efficiency": cdc.get("paired_total_scaling_efficiency"),
+        "median_eps": {
+            c: {"total": lv.get("events_per_sec"), "warm": lv.get("warm_events_per_sec")}
+            for c, lv in cdc.get("levels", {}).items()
+        },
+        "state_parity": cdc.get("state_parity"),
+        "windows": cdc.get("windows", 0),
+    }, separators=(",", ":"))
+
+
+def _finish(results: dict) -> None:
+    cdc = results.get("cdc")
+    if cdc:
+        for c, lv in cdc["levels"].items():
+            results["queries"][f"cdc_apply_local{c}"] = lv["wall_s"]
+    results["value"] = round(sum(results["queries"].values()), 3)
+    results["metric"] = (
+        "headline operator wall times + CDC apply at two parallelism levels"
+    )
+
+
 def main():
     lock = acquire_bench_lock()  # noqa: F841 — held for process lifetime
     results: dict = {"sf": SF_DIR, "unit": "sec"}
@@ -217,7 +452,6 @@ def main():
     queries = run_headline(spark)
     results["queries"] = queries
 
-    cdc = None
     if os.environ.get("BENCH_SKIP_CDC") != "1":
         log(f"== CDC apply throughput, {CDC_EVENTS} events, "
             f"cores {CDC_LEVELS[0]} vs {CDC_LEVELS[1]}, "
@@ -237,221 +471,25 @@ def main():
                 log(f"  local[{cores}] run {rep}: wall={r['wall_s']}s "
                     f"total={r['events_per_sec']} ev/s "
                     f"warm={r['warm_events_per_sec']} ev/s")
-        levels = {}
-        for cores in CDC_LEVELS:
-            runs = sorted(
-                all_runs[str(cores)],
-                key=lambda r: r["warm_events_per_sec"] or 0,
-            )
-            # batches/host_cpu shown from the median-by-warm run; the
-            # summary statistics are PER-METRIC medians across runs
-            # (a run can have a clean warm phase and a stalled batch 1,
-            # so tying total to the median-by-warm run conflates them)
-            med = dict(runs[len(runs) // 2])
-            med["n_runs"] = len(runs)
-
-            def _median(key):
-                # statistics.median: true even-count median (mean of the
-                # middle two) — vals[n//2] is the UPPER median and would
-                # bias every even-repeat statistic optimistically
-                import statistics
-
-                vals = [r[key] for r in runs if r.get(key) is not None]
-                return statistics.median(vals) if vals else None
-
-            med["warm_events_per_sec"] = _median("warm_events_per_sec")
-            med["events_per_sec"] = _median("events_per_sec")
-            med["wall_s"] = _median("wall_s")
-            med["warm_spread"] = [
-                runs[0]["warm_events_per_sec"],
-                runs[-1]["warm_events_per_sec"],
-            ]
-            med["total_spread"] = sorted(
-                r["events_per_sec"] for r in runs
-            )[:: max(len(runs) - 1, 1)]
-            # per-batch rate distribution pooled across ALL runs at this
-            # level, warm batches only (first batch of each run excluded):
-            # a host stall corrupts one batch, not a whole run's statistic
-            warm_batches = [
-                b
-                for r in runs
-                for b in r.get("batches", [])[1:]
-                if b.get("rate")
-            ]
-            pooled = sorted(b["rate"] for b in warm_batches)
-            if pooled:
-                n = len(pooled)
-                med["warm_batch_rates"] = {
-                    "n": n,
-                    "min": pooled[0],
-                    "p25": pooled[n // 4],
-                    "median": pooled[n // 2],
-                    "p75": pooled[(3 * n) // 4],
-                    "max": pooled[-1],
-                }
-            # "clean" = batches whose sampled host CPU shows <=2% steal
-            # AND whose own user+sys is >= 70% of the level's median
-            # (the second mode of hypervisor interference measured here
-            # shows ZERO guest-visible steal while our threads sit
-            # blocked — user% collapses with idle rising; e.g. a 26.7k
-            # batch among 43k siblings at user 8.7% vs 12.9% steady).
-            # Both are MEASURED-interference criteria on the host CPU
-            # mix, never result-value cuts. Excluded counts are always
-            # reported (no silent caps).
-            with_cpu = [b for b in warm_batches if b.get("host_cpu")]
-            busys = sorted(
-                b["host_cpu"].get("user", 0.0) + b["host_cpu"].get("sys", 0.0)
-                for b in with_cpu
-            )
-            med_busy = busys[len(busys) // 2] if busys else 0.0
-            clean = sorted(
-                b["rate"]
-                for b in with_cpu
-                if b["host_cpu"].get("steal", 0.0) <= 2.0
-                and (
-                    b["host_cpu"].get("user", 0.0)
-                    + b["host_cpu"].get("sys", 0.0)
-                    >= 0.7 * med_busy
-                )
-            )
-            if with_cpu:
-                med["clean_batch_rates"] = {
-                    "n": len(clean),
-                    "excluded_stalled": len(with_cpu) - len(clean),
-                    "median": clean[len(clean) // 2] if clean else None,
-                }
-            levels[str(cores)] = med
-        # Full per-batch detail (stage timings, host CPU per batch) is
-        # archived to a side file for forensics; the stdout JSON keeps
-        # only the summary statistics so the final line stays small
-        # enough for the driver's tail capture to parse (the r3
-        # driver-recorded line embedded every batch and exceeded the
-        # capture window -> "parsed": null in BENCH_r03.json).
+            results["cdc"] = cdc_stats(all_runs)
+            _finish(results)
+            # after every paired window: a run cut short still ends on
+            # a line that parses
+            print(summary_line(results), flush=True)
+        # per-batch detail (stage timings, host CPU per batch) for
+        # forensics; stdout carries only the summary line
         detail_path = os.path.join(CACHE, "last_cdc_runs.json")
         with open(detail_path, "w") as f:
             json.dump(all_runs, f)
         log(f"  per-batch detail archived to {detail_path}")
-        for med in levels.values():
-            med.pop("batches", None)
-        lo, hi = (levels[str(c)] for c in CDC_LEVELS)
-        ideal = CDC_LEVELS[1] / CDC_LEVELS[0]
-        warm_ratio = hi["warm_events_per_sec"] / lo["warm_events_per_sec"]
-        total_ratio = hi["events_per_sec"] / lo["events_per_sec"]
 
-        # PAIRED per-window ratios (r4 verdict "Next round" #2): the
-        # median-of-rates statistic divides medians that may come from
-        # DIFFERENT noise windows (the r4 driver record's local[1]
-        # median landed on its fast edge, deflating the ratio to 0.799
-        # while every paired window cleared 0.8). Each interleaved
-        # repeat is one window: its local[N] and local[4N] runs are
-        # temporally adjacent, so host drift cancels inside the ratio.
-        # Median of those per-window ratios is the primary efficiency
-        # statistic; the unpaired medians stay reported for continuity.
-        n_windows = min(len(all_runs[str(c)]) for c in CDC_LEVELS)
-
-        def _paired(key):
-            ratios = []
-            for rep in range(n_windows):
-                a = all_runs[str(CDC_LEVELS[0])][rep].get(key)
-                b = all_runs[str(CDC_LEVELS[1])][rep].get(key)
-                if a and b:
-                    ratios.append(b / a)
-            ratios.sort()
-            return ratios
-
-        def _mid(ratios):
-            # true median (even count -> mean of middle two); the
-            # default repeat count is odd so a single window is the
-            # middle, but an env override must not shift the statistic
-            # to the upper median
-            import statistics
-
-            return statistics.median(ratios) if ratios else None
-
-        paired_warm = _paired("warm_events_per_sec")
-        paired_total = _paired("events_per_sec")
-        # per-window BATCH-median ratio: median warm-batch rate within
-        # each window per level, then the ratio — robust to a single
-        # stalled batch inside an otherwise clean window
-        paired_batch = []
-        for rep in range(n_windows):
-            pair = []
-            for c in CDC_LEVELS:
-                rates = sorted(
-                    b["rate"]
-                    for b in all_runs[str(c)][rep].get("batches", [])[1:]
-                    if b.get("rate")
-                )
-                pair.append(rates[len(rates) // 2] if rates else None)
-            if pair[0] and pair[1]:
-                paired_batch.append(pair[1] / pair[0])
-        paired_batch.sort()
-        batch_ratio = None
-        if lo.get("warm_batch_rates") and hi.get("warm_batch_rates"):
-            batch_ratio = (
-                hi["warm_batch_rates"]["median"]
-                / lo["warm_batch_rates"]["median"]
-            )
-        shas = {r["state_sha"] for rs in all_runs.values() for r in rs}
-        cdc = {
-            "events": lo["n_events"],
-            "levels": levels,
-            "ideal": ideal,
-            "repeats": CDC_REPEATS,
-            "stat": "median, interleaved",
-            "warm_speedup": round(warm_ratio, 3),
-            "warm_scaling_efficiency": round(warm_ratio / ideal, 3),
-            "total_speedup": round(total_ratio, 3),
-            "total_scaling_efficiency": round(total_ratio / ideal, 3),
-            # primary statistic: median of per-window paired ratios
-            # (see comment above) — each entry is one interleaved
-            # window's local[4N]/local[N] from adjacent runs
-            "paired_warm_ratios": [round(r, 3) for r in paired_warm],
-            "paired_total_ratios": [round(r, 3) for r in paired_total],
-            "paired_warm_scaling_efficiency": round(
-                _mid(paired_warm) / ideal, 3
-            ) if paired_warm else None,
-            "paired_total_scaling_efficiency": round(
-                _mid(paired_total) / ideal, 3
-            ) if paired_total else None,
-            "paired_batch_median_scaling_efficiency": round(
-                _mid(paired_batch) / ideal, 3
-            ) if paired_batch else None,
-            "state_parity": len(shas) == 1,  # across EVERY run, both levels
-            # pre/post single-thread CPU probe per run per level —
-            # direct evidence of hypervisor contention in each run's
-            # window (reported, never used to adjust any statistic)
-            "calib_s": {
-                str(c): [r.get("calib_s") for r in all_runs[str(c)]]
-                for c in CDC_LEVELS
-            },
-        }
-        if batch_ratio is not None:
-            cdc["batch_median_speedup"] = round(batch_ratio, 3)
-            cdc["batch_median_scaling_efficiency"] = round(
-                batch_ratio / ideal, 3
-            )
-        lo_clean = lo.get("clean_batch_rates") or {}
-        hi_clean = hi.get("clean_batch_rates") or {}
-        if lo_clean.get("median") and hi_clean.get("median"):
-            clean_ratio = hi_clean["median"] / lo_clean["median"]
-            cdc["clean_batch_median_scaling_efficiency"] = round(
-                clean_ratio / ideal, 3
-            )
-            cdc["stalled_batches_excluded"] = [
-                lo_clean.get("excluded_stalled", 0),
-                hi_clean.get("excluded_stalled", 0),
-            ]
-        results["cdc"] = cdc
-        for c in CDC_LEVELS:
-            results["queries"][f"cdc_apply_local{c}"] = levels[str(c)]["wall_s"]
-
-    results["value"] = round(sum(results["queries"].values()), 3)
-    results["metric"] = (
-        "headline operator wall times + CDC apply at two parallelism levels"
-    )
+    _finish(results)
+    results_path = os.path.join(CACHE, "last_results.json")
+    with open(results_path, "w") as f:
+        json.dump(results, f)
+    log(f"  full results written to {results_path}")
     _append_bench_md(results)
-    print(json.dumps(results), flush=True)
+    print(summary_line(results), flush=True)
 
 
 def _append_bench_md(results: dict) -> None:

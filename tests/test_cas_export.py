@@ -6,6 +6,7 @@ batch-guarded replay, and the streaming relay integration."""
 import glob
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from ton_etl_spark.cdc.cas_export import cas_export, read_manifest
@@ -50,6 +51,17 @@ def test_cas_deterministic_and_idempotent(spark, tmp_path):
     # content round-trips exactly (names are derived FROM the bytes)
     back = spark.read.parquet(*[os.path.join(out, f) for f in files1])
     assert sorted(r["k"] for r in back.collect()) == list(range(500))
+
+    # a nullable column that is all null in one partition's slice is
+    # still written with the column's type: every file has one schema
+    out_n = str(tmp_path / "cas_nulls")
+    cas_export(
+        df.withColumn("note", F.when(F.col("day") == "0", F.lit("x"))),
+        out_n, "day",
+    )
+    schemas = [pq.read_schema(os.path.join(out_n, f)) for f in _files(out_n)]
+    assert len(schemas) == 3
+    assert all(s == schemas[0] for s in schemas), [str(s) for s in schemas]
 
 
 def test_cas_chunking_deterministic(spark, tmp_path):

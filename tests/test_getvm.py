@@ -20,6 +20,8 @@ REG = {
             ("div",),
         ],
         "tag": [("push_field", 0), ("push_arg", 0), ("concat", ":")],
+        # arithmetic on raw fields, no to_int: the op type-checks itself
+        "raw_sum": [("push_field", 0), ("push_field", 1), ("add",)],
         "libbed": [("call_lib", "l1")],
     },
     "c2": {
@@ -69,6 +71,11 @@ def test_row_level_exit_codes(spark):
     assert out["div0"] == (None, 4)
     assert out["short"] == (None, 5)
     assert out["no_code"] == (None, 11)
+
+    raw = _df(spark, [("ok", "c1", "40|2"), ("bad_raw", "c1", "x|2")])
+    out = _collect(run_get_method(raw, REG, "raw_sum", 1), "out_0", "vm_exit_code")
+    assert out["ok"] == ("42", 0)
+    assert out["bad_raw"] == (None, 2)
 
 
 def test_floor_division_negative(spark):

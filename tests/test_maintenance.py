@@ -1,10 +1,13 @@
 """Lake maintenance: corrections delete, tombstone GC, compaction,
 vacuum horizon, rename-collision guard."""
 
+import os
+from urllib.parse import unquote, urlparse
+
 import pytest
 from pyspark.sql import functions as F
 
-from ton_etl_spark.lake.merge import merge_into
+from ton_etl_spark.lake.merge import append_insert, merge_into
 from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.schemas import REPOS_KEY_FIELDS, REPOS_SCHEMA
 
@@ -128,3 +131,101 @@ def test_rebucket_preserves_rows_and_future_merges(spark, tmp_path):
     assert feed == {("r1", "p1"): 200}
     # same-count rebucket is a no-op
     assert t.rebucket(16)["skipped"]
+
+
+def _rows(spark, lo, hi, parts, lsn0=0):
+    """Change rows for keys lo..hi-1 in `parts` input partitions."""
+    return spark.range(lo, hi, numPartitions=parts).select(
+        F.concat(F.lit("r"), (F.col("id") % 97).cast("string")).alias("repo"),
+        F.concat(F.lit("p"), F.col("id").cast("string")).alias("path"),
+        (F.col("id") + lsn0).alias("lsn"),
+        F.lit("c").alias("op"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("content"),
+    )
+
+
+def _assert_manifest_matches_files(t):
+    """bucket_rows, file_stats and bucket placement agree with the data
+    files the manifest lists."""
+    m = t.manifest()
+    scan = (
+        t.read(include_deleted=True)
+        .withColumn("_f", F.input_file_name())
+        .groupBy("_f")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("lsn").alias("lo"),
+            F.max("lsn").alias("hi"),
+            F.collect_set(t.bucket_expr(m)).alias("b"),
+        )
+        .collect()
+    )
+    got = {unquote(urlparse(r["_f"]).path): r for r in scan}
+    live = set()
+    for b, files in m["buckets"].items():
+        n = 0
+        for p in files:
+            live.add(p)
+            r = got.pop(os.path.abspath(os.path.join(t.root, p)))
+            assert r["b"] == [int(b)], (p, b, r["b"])
+            assert m["file_stats"][p] == [r["n"], r["lo"], r["hi"]], p
+            n += r["n"]
+        assert m["bucket_rows"].get(b, 0) == n, b
+    assert not got  # every scanned file is listed in the manifest
+    assert set(m["file_stats"]) == live
+    assert all(
+        n == 0 for b, n in m["bucket_rows"].items() if b not in m["buckets"]
+    )
+
+
+def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
+    t = mk_table(spark, tmp_path, buckets=64)
+    check = _assert_manifest_matches_files
+
+    res = merge_into(t, _rows(spark, 0, 2000, 4), batch_id=1)
+    assert res["strategy"] == "union_agg"
+    check(t)
+
+    res = merge_into(t, upd(spark, [
+        {"repo": "r5", "path": "p5", "lsn": 5000, "op": "u", "content": "n"},
+        {"repo": "r6", "path": "p6", "lsn": 5000, "op": "d"},
+    ]), batch_id=2)
+    assert res["strategy"] == "broadcast"
+    check(t)
+
+    # new keys over 8 input partitions, no key shuffle: each task writes
+    # a file into nearly every bucket -> more than 256 files, one commit
+    res = append_insert(t, _rows(spark, 2000, 10000, 8, lsn0=10000), batch_id=3)
+    assert res["rows_written"] == 8000
+    written = [
+        p for e in t.history()[-1]["lineage"]["buckets"].values()
+        for p in e["files"]
+    ]
+    assert len(written) > 256
+    check(t)
+
+    # an empty append still commits and advances batch_id
+    v = t.current_version()
+    append_insert(t, _rows(spark, 0, 0, 1), batch_id=4)
+    assert t.current_version() == v + 1 and t.manifest()["batch_id"] == 4
+    check(t)
+
+    t.delete_keys(spark.createDataFrame(
+        [("r7", "p7"), ("r8", "p2045")], "repo string, path string"
+    ))
+    check(t)
+
+    n_files = sum(len(fl) for fl in t.manifest()["buckets"].values())
+    assert not t.compact(max_files=1).get("skipped")
+    assert sum(len(fl) for fl in t.manifest()["buckets"].values()) < n_files
+    check(t)
+
+    t.rebucket(16)
+    m = t.manifest()
+    assert m["bucket_count"] == 16 and sorted(m["buckets"], key=int) == [
+        str(b) for b in range(16)
+    ]
+    assert m["lineage"]["type"] == "rebucket"
+    assert all(e["replaced"] == [] for e in m["lineage"]["buckets"].values())
+    check(t)
+    assert t.read(include_deleted=True).count() == 9998

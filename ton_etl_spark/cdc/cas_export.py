@@ -20,6 +20,10 @@ free as well (skip, don't rewrite), mirroring the lake tables'
 batch_id guards; the manifest also gives consumers a commit point the
 reference's raw S3 listing lacks.
 
+`out_dir` must be a local or mounted filesystem shared by the driver
+and every executor: tasks write the files, and the driver writes the
+manifest beside them.
+
 Avro format fidelity itself remains out of scope (no spark-avro jar in
 the sandbox — documented in COVERAGE.md); parquet carries the same
 export model with the same partitioning and the same naming contract.
@@ -35,6 +39,7 @@ import os
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -83,6 +88,9 @@ def cas_export(
 
     os.makedirs(out_dir, exist_ok=True)
     cols = df.columns
+    # one schema for every slice: a nullable column that is all null in
+    # one slice would otherwise be written with arrow type `null`
+    arrow_schema = to_arrow_schema(df.schema)
     sort_cols = [c for c in cols if c != partition_col]
 
     def write_group(g: pd.DataFrame) -> pd.DataFrame:
@@ -102,7 +110,9 @@ def cas_export(
             chunk = g.iloc[lo:lo + max_rows_per_file]
             buf = io.BytesIO()
             pq.write_table(
-                pa.Table.from_pandas(chunk, preserve_index=False),
+                pa.Table.from_pandas(
+                    chunk, schema=arrow_schema, preserve_index=False
+                ),
                 buf, compression="snappy",
             )
             data = buf.getvalue()

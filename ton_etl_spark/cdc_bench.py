@@ -231,7 +231,6 @@ def main() -> None:
         {
             "events": r.get("updated_keys", 0),
             "ms": int((r["t_wall"][1] - r["t_wall"][0]) * 1000),
-            "agg_ms": r.get("agg_ms"),
             "write_ms": r.get("write_ms"),
             "_t_wall": r.get("t_wall"),
         }

@@ -34,8 +34,6 @@ and commit atomically with per-bucket lineage + a metrics row.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from .table import LakeTable
@@ -138,7 +136,6 @@ def merge_into(
     Returns a stats dict; `skipped=True` when `batch_id` was already
     committed (exactly-once replay guard).
     """
-    t0 = time.time()
     m = table.manifest()
     if batch_id is not None and batch_id <= m["batch_id"]:
         return {"skipped": True, "batch_id": batch_id, "version": m["version"]}
@@ -180,7 +177,6 @@ def merge_into(
     # precomputed by the caller from a cheap column-pruned scan of the
     # RAW events (no payload decode) — then the decoded batch flows
     # straight into the merge plan without any materialization.
-    t_agg = time.time()
     persisted = False
     if precomputed is not None:
         n_keys = precomputed["n_upper"]
@@ -286,75 +282,29 @@ def merge_into(
             *[F.col(f"_w.{c}").alias(c) for c in data_cols],
         )
 
-    agg_ms = int((time.time() - t_agg) * 1000)
-
-    new_version = m["version"] + 1
-    resolved = resolved.withColumn("_bucket", table.bucket_expr(m))
-    t_write = time.time()
-    # NO repartition before the bucketed write: the plans above end in
-    # a groupBy on the key columns (union_agg) or preserve the per-file
-    # bucket clustering (broadcast t_keep), and bucket ids are pmod of
-    # the SAME Murmur3 hash HashPartitioning uses — each task holds
-    # whole buckets already (requires bucket_count % shuffle.partitions
-    # == 0 for perfect alignment; misalignment only costs extra files).
-    file_map, rows_map, stats_map = table.write_buckets(
-        resolved, "_bucket", new_version
-    )
-    write_ms = int((time.time() - t_write) * 1000)
-    if persisted:
-        deduped.unpersist()
-
-    # manifest: replace affected buckets, carry the rest
-    new_buckets = {
-        b: fl for b, fl in m["buckets"].items() if int(b) not in set(affected)
-    }
-    new_bucket_rows = {
-        b: n for b, n in m.get("bucket_rows", {}).items()
-        if int(b) not in set(affected)
-    }
-    lineage = {}
-    rows_written = 0
-    for b in affected:
-        files = file_map.get(str(b), [])
-        new_buckets[str(b)] = files
-        rc = rows_map.get(str(b), 0)
-        new_bucket_rows[str(b)] = rc
-        rows_written += rc
-        lineage[str(b)] = {
-            "files": files,
-            "rows": rc,
-            "replaced": m["buckets"].get(str(b), []),
-        }
-    new_manifest = dict(
+    # NO repartition before the bucketed write: both plans end in a
+    # groupBy on the keys or keep the per-file bucket clustering, and
+    # bucket ids are pmod of the same Murmur3 hash HashPartitioning uses
+    # (aligned when bucket_count % shuffle.partitions == 0; otherwise
+    # the write only produces extra files)
+    res = table._commit_data(
+        resolved.withColumn("_bucket", table.bucket_expr(m)),
         m,
-        version=new_version,
-        parent=m["version"],
-        batch_id=batch_id if batch_id is not None else m["batch_id"],
-        buckets=new_buckets,
-        bucket_rows=new_bucket_rows,
-        file_stats=LakeTable.updated_file_stats(m, new_buckets, stats_map),
-        lineage={
-            "type": "merge",
+        affected,
+        {"type": "merge", "strategy": strategy, "lsn_range": [lsn_min, lsn_max]},
+        batch_id=batch_id,
+        metrics={
+            "batch_id": batch_id,
             "strategy": strategy,
-            "lsn_range": [lsn_min, lsn_max],
-            "buckets": lineage,
+            "updated_keys": n_keys,
+            "affected_buckets": len(affected),
+            "lsn_min": lsn_min,
+            "lsn_max": lsn_max,
         },
     )
-    metrics = {
-        "version": new_version,
-        "batch_id": batch_id,
-        "strategy": strategy,
-        "updated_keys": n_keys,
-        "affected_buckets": len(affected),
-        "rows_in_affected_buckets_after": rows_written,
-        "lsn_min": lsn_min,
-        "lsn_max": lsn_max,
-        "agg_ms": agg_ms,
-        "write_ms": write_ms,
-        "wall_ms": int((time.time() - t0) * 1000),
-    }
-    table.commit(new_manifest, metrics)
-    return {"skipped": False, **metrics}
+    if persisted:
+        deduped.unpersist()
+    return {"skipped": False, **res}
 
 
 def append_insert(
@@ -381,7 +331,6 @@ def append_insert(
     batch re-delivered is skipped. Unlike merge_into, an EMPTY batch
     still commits (advancing batch_id) so replay guards see it.
     """
-    t0 = time.time()
     m = table.manifest()
     if batch_id is not None and batch_id <= m["batch_id"]:
         return {"skipped": True, "batch_id": batch_id, "version": m["version"]}
@@ -390,44 +339,12 @@ def append_insert(
     aligned = updates.select(
         *key_cols, vf_col, *data, F.lit(False).alias("_deleted")
     ).withColumn("_bucket", table.bucket_expr(m))
-
-    new_version = m["version"] + 1
-    t_write = time.time()
-    file_map, rows_map, stats_map = table.write_buckets(
-        aligned, "_bucket", new_version
-    )
-    write_ms = int((time.time() - t_write) * 1000)
-
-    # manifest: APPEND the new files to each touched bucket's list and
-    # ADD row counts — untouched buckets carry over verbatim
-    new_buckets = {b: list(fl) for b, fl in m["buckets"].items()}
-    new_bucket_rows = dict(m.get("bucket_rows", {}))
-    lineage = {}
-    rows_written = 0
-    for b, files in file_map.items():
-        new_buckets[b] = new_buckets.get(b, []) + files
-        rc = rows_map.get(b, 0)
-        new_bucket_rows[b] = int(new_bucket_rows.get(b, 0)) + rc
-        rows_written += rc
-        lineage[b] = {"files": files, "rows": rc, "replaced": []}
-    new_manifest = dict(
+    res = table._commit_data(
+        aligned,
         m,
-        version=new_version,
-        parent=m["version"],
-        batch_id=batch_id if batch_id is not None else m["batch_id"],
-        buckets=new_buckets,
-        bucket_rows=new_bucket_rows,
-        file_stats=LakeTable.updated_file_stats(m, new_buckets, stats_map),
-        lineage={"type": "append", "strategy": "append", "buckets": lineage},
+        (),
+        {"type": "append", "strategy": "append"},
+        batch_id=batch_id,
+        metrics={"batch_id": batch_id, "strategy": "append"},
     )
-    metrics = {
-        "version": new_version,
-        "batch_id": batch_id,
-        "strategy": "append",
-        "appended_rows": rows_written,
-        "appended_buckets": len(lineage),
-        "write_ms": write_ms,
-        "wall_ms": int((time.time() - t0) * 1000),
-    }
-    table.commit(new_manifest, metrics)
-    return {"skipped": False, **metrics}
+    return {"skipped": False, **res}

@@ -6,12 +6,16 @@ Why hand-rolled: the engine targets Iceberg `MERGE INTO` semantics
 implements the same contract on plain parquet:
 
   * data is hash-bucketed on the key columns (`bucket =
-    pmod(xxhash64(*keys), bucket_count)`) so a MERGE touches only the
-    buckets containing changed keys — at 100 TB / 64k buckets a CDC
-    micro-batch rewrites a tiny fraction of the table;
+    pmod(hash(*keys), bucket_count)`, Spark's Murmur3 `hash`) so a
+    MERGE touches only the buckets containing changed keys — at 100 TB
+    / 64k buckets a CDC micro-batch rewrites a tiny fraction of the
+    table;
   * every commit writes new files plus a JSON manifest and atomically
     swaps a `_current` pointer (os.replace) — readers always see a
-    consistent snapshot; old versions remain readable (time travel);
+    consistent snapshot; old versions remain readable (time travel).
+    All data commits (merge, append, rewrite, rebucket) go through one
+    method, `_commit_data`, so the manifest format lives in this module
+    alone;
   * commits record the streaming `batch_id`, so a replayed foreachBatch
     epoch after checkpoint recovery is detected and skipped — this plus
     the LSN-guarded merge gives exactly-once sink semantics (the
@@ -36,6 +40,11 @@ Layout:
     <root>/_current                text file holding latest version number
     <root>/_metrics/*.json         one metrics row per commit
     <root>/data/v<N>/_bucket=<i>/  parquet files written by commit N
+
+The table root must be a local or mounted filesystem shared by the
+driver and every executor: executors write the data files, and the
+driver lists them (`glob`), reads their footers and swaps the manifest
+with `os.replace`.
 """
 
 from __future__ import annotations
@@ -44,7 +53,9 @@ import glob
 import json
 import os
 import shutil
+import time
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
@@ -60,6 +71,9 @@ _WIDENINGS = {
 
 
 class LakeTable:
+    """A bucketed copy-on-write table rooted at `root`, a path on a
+    filesystem shared by driver and executors (see the module docstring)."""
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
@@ -163,7 +177,10 @@ class LakeTable:
     def schema(
         self, version: int | None = None, include_system: bool = False
     ) -> T.StructType:
-        m = self.manifest(version)
+        return self._logical_schema(self.manifest(version), include_system)
+
+    @staticmethod
+    def _logical_schema(m: dict, include_system: bool) -> T.StructType:
         return T.StructType(
             [
                 T.StructField(f["name"], spark_type_from_string(f["type"]), True)
@@ -281,18 +298,23 @@ class LakeTable:
             # no stats recorded -> must read the file
             return st is not None and st[2] is not None and st[2] <= min_version_exclusive
 
-        files: list[str] = []
-        for b, flist in m["buckets"].items():
-            if buckets is None or int(b) in buckets:
-                files.extend(
-                    os.path.join(self.root, p) for p in flist if not skip(p)
-                )
-        phys = self._phys_schema(m)
-        logical = self.schema(version, include_system=True)
+        files = [
+            p
+            for b, flist in m["buckets"].items()
+            if buckets is None or int(b) in buckets
+            for p in flist
+            if not skip(p)
+        ]
+        return self._scan(m, files, include_deleted)
+
+    def _scan(self, m: dict, files: list[str], include_deleted: bool) -> DataFrame:
+        """Read `files` (root-relative) under manifest `m`'s schema."""
         if not files:
-            df = self.spark.createDataFrame([], logical)
+            df = self.spark.createDataFrame([], self._logical_schema(m, True))
         else:
-            df = self.spark.read.schema(phys).parquet(*files).select(
+            df = self.spark.read.schema(self._phys_schema(m)).parquet(
+                *[os.path.join(self.root, p) for p in files]
+            ).select(
                 *[F.col(f"f{f['id']}").alias(f["name"]) for f in m["fields"]]
             )
         if include_deleted:
@@ -301,7 +323,7 @@ class LakeTable:
             ~F.coalesce(F.col("_deleted"), F.lit(False))
         ).drop("_deleted")
 
-    # -- writes (used by merge) ----------------------------------------------
+    # -- writes ----------------------------------------------------------------
 
     def write_buckets(
         self, df: DataFrame, bucket_col: str, version: int
@@ -331,142 +353,120 @@ class LakeTable:
                 os.path.relpath(p, self.root)
                 for p in glob.glob(os.path.join(d, "*.parquet"))
             ]
-        rows_map, stats_map = self._footer_scan(out, m)
-        return out, rows_map, stats_map
+        stats = self._footer_scan([p for fl in out.values() for p in fl], m)
+        rows_map = {b: sum(stats[p][0] for p in fl) for b, fl in out.items()}
+        return out, rows_map, stats
 
-    def _vf_phys(self, m: dict) -> str | None:
-        for f in m["fields"]:
-            if f["name"] == m["version_field"]:
-                return f"f{f['id']}"
-        return None
-
-    def _footer_scan(
-        self, file_map: dict[str, list[str]], m: dict
-    ) -> tuple[dict[str, int], dict[str, list]]:
-        """Per-bucket row counts AND per-file version-field min/max of
-        freshly written files, WITHOUT a serial driver loop over parquet
-        footers (the O(files) per-commit driver I/O was the pipeline's
-        serial floor). Small commits (the streaming steady state) read
-        footers concurrently on the driver; large commits use one
-        distributed Spark job (count + min/max over the single version
-        column — footer row counts plus one bigint column's pages).
-        Stats are recorded only for integer version fields (the engine's
-        LSN discipline); anything else degrades to rows-only."""
+    def _footer_scan(self, files: list[str], m: dict) -> dict[str, list]:
+        """[rows, min_vf, max_vf] per freshly written file, read from the
+        parquet footers by a driver thread pool (a serial loop over
+        footers was the commit's floor). Min/max are recorded only for
+        integer version fields (the engine's LSN discipline); anything
+        else degrades to rows-only."""
         import pyarrow.parquet as pq
+        from concurrent.futures import ThreadPoolExecutor
 
-        vf_phys = self._vf_phys(m)
-        n_files = sum(len(v) for v in file_map.values())
-        if n_files == 0:
-            return {}, {}
-        if n_files <= 256:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def scan_one(p: str) -> tuple[int, int | None, int | None]:
-                md = pq.read_metadata(os.path.join(self.root, p))
-                vmin = vmax = None
-                col_idx = None
-                if vf_phys is not None:
-                    for i in range(md.num_columns):
-                        if md.schema.column(i).name == vf_phys:
-                            col_idx = i
-                            break
-                if col_idx is not None:
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(col_idx).statistics
-                        if (
-                            st is None
-                            or not st.has_min_max
-                            or not isinstance(st.min, int)
-                            or isinstance(st.min, bool)
-                        ):
-                            vmin = vmax = None
-                            break
-                        vmin = st.min if vmin is None else min(vmin, st.min)
-                        vmax = st.max if vmax is None else max(vmax, st.max)
-                return md.num_rows, vmin, vmax
-
-            # ONE global submission across all buckets: per-bucket map()
-            # calls would serialize the steady-state commit shape (many
-            # buckets x one file each) down to one footer at a time
-            flat = [p for files in file_map.values() for p in files]
-            with ThreadPoolExecutor(max_workers=min(32, n_files)) as ex:
-                scanned = dict(zip(flat, ex.map(scan_one, flat)))
-            rows_map = {
-                b: sum(scanned[p][0] for p in files)
-                for b, files in file_map.items()
-            }
-            stats_map = {p: list(s) for p, s in scanned.items()}
-            return rows_map, stats_map
-        all_files = [
-            os.path.join(self.root, p) for fl in file_map.values() for p in fl
-        ]
-        aggs = [F.count(F.lit(1)).alias("count")]
-        if vf_phys is not None:
-            aggs += [
-                F.min(vf_phys).alias("_vmin"), F.max(vf_phys).alias("_vmax")
-            ]
-        rows = (
-            self.spark.read.parquet(*all_files)
-            .groupBy(F.input_file_name().alias("_f"))
-            .agg(*aggs)
-            .collect()
+        vf_phys = next(
+            (f"f{f['id']}" for f in m["fields"] if f["name"] == m["version_field"]),
+            None,
         )
-        # normalize BOTH sides to a scheme-less absolute path:
-        # input_file_name() renders URIs differently across filesystems
-        # ('file:/', 'file:///', 'hdfs://nn/', 's3a://bucket/'); matching
-        # raw strings silently zeroed counts on any other rendering,
-        # corrupting manifest stats (ADVICE r2)
-        from urllib.parse import unquote, urlparse
 
-        def norm(u: str) -> str:
-            # unquote: input_file_name() percent-encodes (a root with a
-            # space renders as %20) while the manifest side is a plain
-            # os.path — without decoding, every file under such a root
-            # would land in `missing` and hard-fail the commit
-            parsed = urlparse(u)
-            return unquote(parsed.path) if parsed.scheme else u
-
-        by_file = {norm(r["_f"]): r for r in rows}
-        counted: dict[str, int] = {}
-        stats: dict[str, list] = {}
-        missing: list[str] = []
-        for b, files in file_map.items():
-            total = 0
-            for p in files:
-                full = norm(os.path.abspath(os.path.join(self.root, p)))
-                if full in by_file:
-                    r = by_file[full]
-                    total += r["count"]
-                    vmin = r["_vmin"] if vf_phys is not None else None
-                    vmax = r["_vmax"] if vf_phys is not None else None
-                    if not isinstance(vmin, int) or isinstance(vmin, bool):
-                        vmin = vmax = None
-                    stats[p] = [r["count"], vmin, vmax]
-                else:
-                    missing.append(p)
-            counted[b] = total
-        if missing:
-            # a written file absent from the counted scan is a real
-            # inconsistency — fail loudly instead of recording 0 rows
-            raise RuntimeError(
-                f"bucket row-count scan missed {len(missing)} written "
-                f"file(s), e.g. {missing[:3]}"
+        def scan_one(p: str) -> list:
+            md = pq.read_metadata(os.path.join(self.root, p))
+            vmin = vmax = None
+            col_idx = next(
+                (i for i in range(md.num_columns)
+                 if md.schema.column(i).name == vf_phys),
+                None,
             )
-        return counted, stats
+            if col_idx is not None:
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(col_idx).statistics
+                    if (
+                        st is None
+                        or not st.has_min_max
+                        or not isinstance(st.min, int)
+                        or isinstance(st.min, bool)
+                    ):
+                        vmin = vmax = None
+                        break
+                    vmin = st.min if vmin is None else min(vmin, st.min)
+                    vmax = st.max if vmax is None else max(vmax, st.max)
+            return [md.num_rows, vmin, vmax]
 
-    @staticmethod
-    def updated_file_stats(
-        m: dict, new_buckets: dict[str, list[str]], new_stats: dict[str, list]
-    ) -> dict[str, list]:
-        """file_stats for a child manifest: keep stats of carried-over
-        files, add the freshly written ones, drop replaced files."""
-        old = m.get("file_stats", {})
-        live = {p for fl in new_buckets.values() for p in fl}
-        out = {p: old[p] for p in live if p in old}
-        for p, s in new_stats.items():
-            if p in live:
-                out[p] = s
-        return out
+        if not files:
+            return {}
+        # one submission across all buckets: the steady-state commit is
+        # many buckets x one file each
+        with ThreadPoolExecutor(max_workers=min(32, len(files))) as ex:
+            return dict(zip(files, ex.map(scan_one, files)))
+
+    def _commit_data(
+        self,
+        df: DataFrame,
+        base: dict,
+        replace: Iterable[int],
+        lineage: dict,
+        batch_id: int | None = None,
+        metrics: dict | None = None,
+    ) -> dict:
+        """The one data-commit rule: write `df` (with a `_bucket` column)
+        as version `base.version + 1`, then commit the child of `base`.
+
+        Each bucket's files are base's files (none if the bucket is in
+        `replace`) plus the files written now; rows follow the same
+        rule. `file_stats` keeps the entries of live files and adds the
+        new ones. Lineage is `lineage` plus a {files, rows, replaced}
+        entry per replaced or written bucket. Returns the metrics row:
+        `metrics` plus version, rows_written, buckets_written and
+        write_ms; it is stored beside the commit only if `metrics` is
+        given."""
+        version = base["version"] + 1
+        t_write = time.time()
+        file_map, rows_map, stats_map = self.write_buckets(df, "_bucket", version)
+        write_ms = int((time.time() - t_write) * 1000)
+
+        replace = {str(b) for b in replace}
+        buckets = {b: fl for b, fl in base["buckets"].items() if b not in replace}
+        bucket_rows = {
+            b: n for b, n in base.get("bucket_rows", {}).items()
+            if b not in replace
+        }
+        per_bucket = {}
+        for b in sorted(replace | set(file_map), key=int):
+            files, rows = file_map.get(b, []), rows_map.get(b, 0)
+            buckets[b] = buckets.get(b, []) + files
+            bucket_rows[b] = int(bucket_rows.get(b, 0)) + rows
+            per_bucket[b] = {
+                "files": files,
+                "rows": rows,
+                "replaced": base["buckets"].get(b, []) if b in replace else [],
+            }
+        all_stats = {**base.get("file_stats", {}), **stats_map}
+        file_stats = {
+            p: all_stats[p] for fl in buckets.values() for p in fl if p in all_stats
+        }
+        row = dict(
+            metrics or {},
+            version=version,
+            rows_written=sum(rows_map.values()),
+            buckets_written=len(file_map),
+            write_ms=write_ms,
+        )
+        self.commit(
+            dict(
+                base,
+                version=version,
+                parent=base["version"],
+                batch_id=base["batch_id"] if batch_id is None else batch_id,
+                buckets=buckets,
+                bucket_rows=bucket_rows,
+                file_stats=file_stats,
+                lineage=dict(lineage, buckets=per_bucket),
+            ),
+            row if metrics is not None else None,
+        )
+        return row
 
     def read_changes(
         self,
@@ -527,30 +527,12 @@ class LakeTable:
                 f"vacuum (horizon is v{horizon}); re-bootstrap the "
                 f"consumer from a full read"
             )
-        m = self.manifest(v)
         files: list[str] = []
         for vv in range(since_version + 1, v + 1):
-            mv = self.manifest(vv)
             pref = os.path.join("data", f"v{vv}") + os.sep
-            for flist in mv["buckets"].values():
-                files.extend(
-                    os.path.join(self.root, p)
-                    for p in flist
-                    if p.startswith(pref)
-                )
-        phys = self._phys_schema(m)
-        logical = self.schema(v, include_system=True)
-        if not files:
-            df = self.spark.createDataFrame([], logical)
-        else:
-            df = self.spark.read.schema(phys).parquet(*files).select(
-                *[F.col(f"f{f['id']}").alias(f["name"]) for f in m["fields"]]
-            )
-        if include_deleted:
-            return df
-        return df.filter(
-            ~F.coalesce(F.col("_deleted"), F.lit(False))
-        ).drop("_deleted")
+            for flist in self.manifest(vv)["buckets"].values():
+                files.extend(p for p in flist if p.startswith(pref))
+        return self._scan(self.manifest(v), files, include_deleted)
 
     # -- maintenance -----------------------------------------------------------
 
@@ -563,35 +545,17 @@ class LakeTable:
         if not buckets:
             return {"skipped": True, "version": m["version"]}
         df = transform(self.read(buckets=buckets, include_deleted=True))
-        new_version = m["version"] + 1
-        file_map, rows_map, stats_map = self.write_buckets(
-            df.withColumn("_bucket", self.bucket_expr(m)), "_bucket", new_version
+        res = self._commit_data(
+            df.withColumn("_bucket", self.bucket_expr(m)), m, buckets,
+            {"type": note},
         )
-        new_buckets = dict(m["buckets"])
-        new_rows = dict(m.get("bucket_rows", {}))
-        for b in buckets:
-            new_buckets[str(b)] = file_map.get(str(b), [])
-            new_rows[str(b)] = rows_map.get(str(b), 0)
-        self.commit(
-            dict(
-                m,
-                version=new_version,
-                parent=m["version"],
-                buckets=new_buckets,
-                bucket_rows=new_rows,
-                file_stats=self.updated_file_stats(m, new_buckets, stats_map),
-                lineage={"type": note, "buckets": sorted(buckets)},
-            )
-        )
-        return {"version": new_version, "buckets": sorted(buckets)}
+        return {"version": res["version"], "buckets": sorted(buckets)}
 
     def delete_keys(self, keys_df, note: str = "corrections") -> dict:
         """Out-of-band corrections: hard-remove the given keys (the
         reference's `excluded_rows` mechanism, datalake/README.md:370-401
         / athena_ddl.sql:386-400 — rows listed there must be absent after
         a correction replay). Anti-join rewrite of affected buckets."""
-        from pyspark.sql import functions as F
-
         kdf = keys_df.select(*self.key_fields()).distinct().persist()
         buckets = [
             r["_b"]
@@ -612,8 +576,6 @@ class LakeTable:
         watermark. A purged key could be resurrected by an even older
         late event — choose the watermark accordingly (this is the
         standard tombstone-retention tradeoff)."""
-        from pyspark.sql import functions as F
-
         m = self.manifest()
         vf = m["version_field"]
         buckets = [int(b) for b, fl in m["buckets"].items() if fl]
@@ -645,36 +607,16 @@ class LakeTable:
         if new_bucket_count < 1:
             raise ValueError(f"bucket_count must be >= 1, got {new_bucket_count}")
         df = self.read(include_deleted=True)
-        m2 = dict(m, bucket_count=new_bucket_count)
-        new_version = m["version"] + 1
-        # write_buckets reads the CURRENT manifest for phys columns;
-        # fields are unchanged, only the bucket assignment differs
-        file_map, rows_map, stats_map = self.write_buckets(
+        base = dict(m, bucket_count=new_bucket_count, buckets={}, bucket_rows={})
+        res = self._commit_data(
             df.repartition(new_bucket_count, *[F.col(k) for k in m["key_fields"]])
-            .withColumn("_bucket", self.bucket_expr(m2)),
-            "_bucket",
-            new_version,
-        )
-        buckets = {str(b): file_map.get(str(b), []) for b in range(new_bucket_count)}
-        self.commit(
-            dict(
-                m2,
-                version=new_version,
-                parent=m["version"],
-                buckets=buckets,
-                bucket_rows={
-                    str(b): rows_map.get(str(b), 0) for b in range(new_bucket_count)
-                },
-                file_stats=self.updated_file_stats(m, buckets, stats_map),
-                lineage={
-                    "type": "rebucket",
-                    "from": m["bucket_count"],
-                    "to": new_bucket_count,
-                },
-            )
+            .withColumn("_bucket", self.bucket_expr(base)),
+            base,
+            range(new_bucket_count),
+            {"type": "rebucket", "from": m["bucket_count"], "to": new_bucket_count},
         )
         return {
-            "version": new_version,
+            "version": res["version"],
             "from": m["bucket_count"],
             "to": new_bucket_count,
         }

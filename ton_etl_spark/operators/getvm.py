@@ -43,6 +43,7 @@ Instruction set (stack of pandas Series, one slot per row):
   ("to_int",)         top -> int64 (unparseable -> exit 2, TVM's
                       type-check error analogue)
   ("add",) ("sub",) ("mul",)   integer arithmetic on the top two
+                      (a non-numeric operand -> exit 2)
   ("div",)            integer floor-div (div by zero -> exit 4)
   ("concat", sep)     top two strings -> a+sep+b
   ("call_lib", name)  inline the named library program (missing ->
@@ -123,16 +124,15 @@ def _run_program(
             stack.append(s)
         elif op in ("add", "sub", "mul", "div"):
             b, a = stack.pop(), stack.pop()
+            a, b = pd.to_numeric(a, errors="coerce"), pd.to_numeric(b, errors="coerce")
+            # operands that skipped `to_int` fail the type check here
+            fail(a.isna() | b.isna(), 2)
             if op == "div":
-                zero = pd.to_numeric(b, errors="coerce") == 0
+                zero = b == 0
                 fail(zero, 4)
-                b = b.mask(zero, 1)  # placeholder; masked by exit code
-                stack.append(
-                    (pd.to_numeric(a, errors="coerce")
-                     // pd.to_numeric(b, errors="coerce"))
-                )
+                # placeholder divisor; masked by exit code
+                stack.append(a // b.mask(zero, 1))
             else:
-                a, b = pd.to_numeric(a, errors="coerce"), pd.to_numeric(b, errors="coerce")
                 stack.append(a + b if op == "add" else a - b if op == "sub" else a * b)
         elif op == "concat":
             b, a = stack.pop(), stack.pop()
