@@ -182,15 +182,23 @@ def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
     t = mk_table(spark, tmp_path, buckets=64)
     check = _assert_manifest_matches_files
 
+    def one_file_per_bucket():
+        # the merge aggregation hash-partitions on the keys, so each
+        # rewritten bucket is written by one task
+        per_bucket = t.history()[-1]["lineage"]["buckets"]
+        assert per_bucket and all(len(e["files"]) == 1 for e in per_bucket.values())
+
     res = merge_into(t, _rows(spark, 0, 2000, 4), batch_id=1)
     assert res["strategy"] == "union_agg"
+    one_file_per_bucket()
     check(t)
 
     res = merge_into(t, upd(spark, [
         {"repo": "r5", "path": "p5", "lsn": 5000, "op": "u", "content": "n"},
         {"repo": "r6", "path": "p6", "lsn": 5000, "op": "d"},
     ]), batch_id=2)
-    assert res["strategy"] == "broadcast"
+    assert res["strategy"] == "union_agg"
+    one_file_per_bucket()
     check(t)
 
     # new keys over 8 input partitions, no key shuffle: each task writes
@@ -218,6 +226,7 @@ def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
     n_files = sum(len(fl) for fl in t.manifest()["buckets"].values())
     assert not t.compact(max_files=1).get("skipped")
     assert sum(len(fl) for fl in t.manifest()["buckets"].values()) < n_files
+    assert all(len(fl) <= 1 for fl in t.manifest()["buckets"].values())
     check(t)
 
     t.rebucket(16)

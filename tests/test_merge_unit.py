@@ -1,5 +1,5 @@
 """Unit tests of the merge kernel: LSN dedup, LWW guards, tombstones,
-salting parity, strategy equivalence, schema evolution reads."""
+salting parity, narrow-batch oracle, schema evolution reads."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -92,33 +92,14 @@ def test_equal_lsn_keeps_target(spark, tmp_path):
     assert live(t)[("r1", "p1")] == (10, "first")  # strict `<` guard
 
 
-# -- strategy equivalence ---------------------------------------------------
+# -- narrow batch vs oracle ------------------------------------------------
 
-def test_broadcast_and_union_agg_agree(spark, tmp_path, monkeypatch):
-    rows = [
-        {"repo": f"r{i % 3}", "path": f"p{i}", "lsn": 100 + i, "op": "c",
-         "content": f"c{i}"}
-        for i in range(50)
-    ] + [{"repo": "r0", "path": "p0", "lsn": 500, "op": "d"}]
-
-    t1 = mk_table(spark, tmp_path, "bcast")
-    merge_into(t1, upd(spark, rows))
-
-    import ton_etl_spark.lake.merge as M
-    monkeypatch.setattr(M, "BROADCAST_KEY_LIMIT", 0)  # force union_agg
-    t2 = mk_table(spark, tmp_path, "uagg")
-    res = merge_into(t2, upd(spark, rows))
-    assert res["strategy"] == "union_agg"
-    assert live(t1) == live(t2)
+OP_RANK = {"d": 3, "u": 2, "c": 1}
 
 
-def test_broadcast_byte_bound_forces_union_agg(spark, tmp_path, monkeypatch):
-    """The broadcast strategy is gated on estimated key BYTES, not just
-    row count: at the boundary the same batch flips strategy and the
-    results stay identical."""
-    import ton_etl_spark.lake.merge as M
-
-    # seed a fat table so affected_rows > 4 * n_keys (broadcast-eligible)
+def test_narrow_batch_matches_max_lsn_oracle(spark, tmp_path):
+    """A few keys over a 200-key seeded table: per key the max
+    (lsn, op_rank) change wins unless the target row is at least as new."""
     base = [
         {"repo": "r0", "path": f"seed{i}", "lsn": i + 1, "op": "c",
          "content": f"s{i}"}
@@ -126,21 +107,30 @@ def test_broadcast_byte_bound_forces_union_agg(spark, tmp_path, monkeypatch):
     ]
     batch = [
         {"repo": "r0", "path": "seed5", "lsn": 900, "op": "u", "content": "n5"},
-        {"repo": "r0", "path": "seed6", "lsn": 901, "op": "u", "content": "n6"},
+        {"repo": "r0", "path": "seed5", "lsn": 900, "op": "u", "content": "n5"},
+        {"repo": "r0", "path": "seed6", "lsn": 901, "op": "d"},
+        {"repo": "r0", "path": "seed7", "lsn": 8, "op": "u", "content": "tie"},
+        {"repo": "r0", "path": "fresh", "lsn": 902, "op": "c", "content": "f"},
     ]
+    t = mk_table(spark, tmp_path)
+    merge_into(t, upd(spark, base))
+    res = merge_into(t, upd(spark, batch))
+    assert res["strategy"] == "union_agg"
 
-    t1 = mk_table(spark, tmp_path, "wide_cap")
-    merge_into(t1, upd(spark, base))
-    r1 = merge_into(t1, upd(spark, batch))
-    assert r1["strategy"] == "broadcast"
-
-    # shrink the byte cap below ~2 keys * (width + overhead)
-    monkeypatch.setattr(M, "BROADCAST_BYTES_CAP", 16)
-    t2 = mk_table(spark, tmp_path, "tiny_cap")
-    merge_into(t2, upd(spark, base))
-    r2 = merge_into(t2, upd(spark, batch))
-    assert r2["strategy"] == "union_agg"
-    assert live(t1) == live(t2)
+    # oracle: target rows rank above batch rows at an equal lsn
+    state = {(r["repo"], r["path"]): (r["lsn"], 1, 0, r) for r in base}
+    for r in batch:
+        k = (r["repo"], r["path"])
+        cand = (r["lsn"], 0, OP_RANK[r["op"]], r)
+        if k not in state or cand[:3] > state[k][:3]:
+            state[k] = cand
+    want = {
+        k: (v[3]["lsn"], v[3]["content"])
+        for k, v in state.items()
+        if v[3]["op"] != "d"
+    }
+    assert live(t) == want
+    assert want[("r0", "seed7")] == (8, "s7") and ("r0", "seed6") not in want
 
 
 # -- salting parity ---------------------------------------------------------

@@ -92,7 +92,7 @@ def test_crash_between_band_and_doc_commits_heals(spark, tmp_path, idx):
     crash_bands = twin.bands_table.read().filter(F.col("lsn") == 2).select(
         "band", "band_hash", "doc_id", "lsn", F.lit("c").alias("op")
     )
-    merge_into(idx.bands_table, crash_bands, batch_id=2, pre_deduped=True)
+    merge_into(idx.bands_table, crash_bands, batch_id=2)
     assert idx.bands_table.manifest()["batch_id"] == 2
     assert idx.docs_table.manifest()["batch_id"] == 1
 

@@ -106,7 +106,7 @@ class NovelContentFeed:
             F.col("lsn").cast("long").alias("lsn"),
             F.lit("c").alias("op"),
         )
-        merge_into(self.sink, updates, batch_id=version, pre_deduped=True)
+        merge_into(self.sink, updates, batch_id=version)
 
     def poll_once(self) -> dict:
         """Consume the next source commit (if any) through the dedup

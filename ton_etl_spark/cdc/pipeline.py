@@ -486,11 +486,6 @@ def apply_batch(
         F.min(F.when(is_data, F.col("lsn"))).alias("lsn_min"),
         F.max(F.when(is_data, F.col("lsn"))).alias("lsn_max"),
         F.collect_set(F.when(is_data, bucket)).alias("buckets"),
-        # avg key width feeds the merge's broadcast byte bound — free
-        # here instead of a separate job there
-        F.avg(
-            F.when(is_data, F.length("repo") + F.length("path"))
-        ).alias("key_bytes_avg"),
         # structurally-malformed upserts (unparseable payload JSON),
         # counted JVM-side in THIS aggregation (pyspark's Observation
         # never fires for foreachBatch batch queries). Codec-level
@@ -558,7 +553,6 @@ def apply_batch(
         "n_upper": row0["n"],
         "lsn_min": row0["lsn_min"],
         "lsn_max": row0["lsn_max"],
-        "key_bytes_avg": row0["key_bytes_avg"],
         "buckets": list(row0["buckets"])
         + [r["_bucket_new"] for r in ctl if r["event_type"] == "file_rename"],
     }

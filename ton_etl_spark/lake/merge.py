@@ -9,27 +9,23 @@ Semantics reproduced from the reference's upsert layer:
     parser/main.py:70-71; the north rule requires them): a delete wins
     only if its LSN is newer than the target row's.
 
-Correctness-critical pre-step: **in-batch LSN-max dedup**. At-least-once
-delivery + multiple updates to one key per micro-batch mean the source
-can hold many rows per key; the merge must apply only the winner
-(max (lsn, op_rank)) — a real Iceberg MERGE would error on duplicate
-source keys. The dedup is a hash aggregation (`max(struct(...))`) so it
-gets map-side partial aggregation for free; for detected hot keys it runs
-two-phase with an explicit salt column (north rule skew handling): each
-shuffle partition first collapses (key, salt) groups, then the tiny
-residue is collapsed per key.
+One plan resolves every batch. Duplicate deliveries and several
+changes to one key per micro-batch mean the batch can hold many rows
+per key; only the winner (max (lsn, op_rank)) may apply — a real
+Iceberg MERGE would error on duplicate source keys. The affected target
+buckets (tombstones included) are unioned with the batch, and one hash
+aggregation, `groupBy(keys).max(struct(lsn, _src, _op_rank, data...))`,
+picks the winner per key. `_src` ranks target rows above batch rows, so
+an equal LSN keeps the target (the strict guard). Map-side partial
+aggregation collapses a key's duplicates before the shuffle. For
+detected hot keys a salted phase 1 runs first (north rule skew
+handling): it collapses (key, salt) groups, spreading a mega-key over
+`salt` reducers, and the union aggregation finishes the job.
 
-Two physical strategies, chosen by deduped batch size:
-
-  * broadcast (the steady-state CDC case): the deduped update keys are
-    broadcast; affected target buckets stream through a map-side join
-    with zero shuffle of target data — the analogue of the reference's
-    per-row indexed point reads, at Spark scale.
-  * union-agg (bulk loads): target ∪ updates, one hash aggregation picks
-    the winner per key. No join at all, skew-resistant by partial agg.
-
-Both rewrite only the buckets that contain changed keys (copy-on-write)
-and commit atomically with per-bucket lineage + a metrics row.
+The aggregation's output is hash-partitioned on the keys by the same
+Murmur3 hash the buckets use, so each rewritten bucket (copy-on-write)
+is written as one file, and the commit is atomic with per-bucket
+lineage and a metrics row.
 """
 
 from __future__ import annotations
@@ -37,17 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .table import LakeTable
-
-BROADCAST_KEY_LIMIT = 4_000_000  # deduped keys above this -> union-agg plan
-# hard byte bound on the broadcast strategy: F.broadcast is a HARD hint
-# that bypasses autoBroadcastJoinThreshold, so a row-count cap alone can
-# broadcast hundreds of MB of key strings per executor (driver/executor
-# OOM at scale). The estimate is n_keys * (avg key width + overhead);
-# above the cap the merge falls back to union_agg, which never
-# broadcasts. Width rides along in the same control-plane aggregation
-# the pipeline already runs — no extra job.
-BROADCAST_BYTES_CAP = 256 * 1024 * 1024
-_KEY_ROW_OVERHEAD = 32  # per-row struct/offset overhead in the broadcast rel
 
 
 def _aligned_columns(table: LakeTable, m: dict, updates: DataFrame):
@@ -124,7 +109,6 @@ def merge_into(
     updates: DataFrame,
     batch_id: int | None = None,
     salt: int | None = None,
-    pre_deduped: bool = False,
     precomputed: dict | None = None,
 ) -> dict:
     """Apply a batch of change rows to the lake table.
@@ -142,9 +126,9 @@ def merge_into(
 
     keys = m["key_fields"]
     vf = m["version_field"]
-    all_cols = [f["name"] for f in m["fields"]]  # includes system _deleted
-    data_cols = [c for c in all_cols if c not in keys and c != vf]
-
+    data_cols = [  # includes the system _deleted column
+        f["name"] for f in m["fields"] if f["name"] not in keys and f["name"] != vf
+    ]
     key_cols, vf_col, data = _aligned_columns(table, m, updates)
     op_rank = (
         F.col("_op_rank")
@@ -154,7 +138,7 @@ def merge_into(
         .when(F.col("op") == "c", F.lit(1))
         .otherwise(F.lit(0))
     )
-    aligned = updates.select(
+    batch = updates.select(
         *key_cols,
         vf_col,
         F.col("op").alias("op"),
@@ -162,148 +146,87 @@ def merge_into(
         *data,
         (F.col("op") == "d").alias("_deleted"),
     )
-
-    # partial (salted) dedup only: the merge aggregation below finishes
-    # it, so the fat content rows cross one less shuffle. The broadcast
-    # strategy finalizes explicitly (it needs one row per source key).
-    deduped = (
-        aligned
-        if pre_deduped
-        else dedup_updates(aligned, keys, vf, data_cols, salt=salt, final=False)
-    )
-    deduped = deduped.withColumn("_bucket", table.bucket_expr(m))
+    if salt and salt > 1:
+        batch = dedup_updates(batch, keys, vf, data_cols, salt=salt, final=False)
 
     # batch stats (affected buckets / row bound / LSN range) may be
     # precomputed by the caller from a cheap column-pruned scan of the
     # RAW events (no payload decode) — then the decoded batch flows
     # straight into the merge plan without any materialization.
-    persisted = False
     if precomputed is not None:
-        n_keys = precomputed["n_upper"]
-        lsn_min, lsn_max = precomputed["lsn_min"], precomputed["lsn_max"]
-        affected = sorted(set(precomputed["buckets"]))
-        key_width = precomputed.get("key_bytes_avg")
-    else:
-        deduped = deduped.persist()
-        persisted = True
-        agg = deduped.agg(
-            F.count(F.lit(1)).alias("n"),
+        return _union_merge(table, m, batch, data_cols, precomputed, batch_id)
+    batch = batch.persist()
+    try:
+        stats = batch.agg(
+            F.count(F.lit(1)).alias("n_upper"),
             F.min(vf).alias("lsn_min"),
             F.max(vf).alias("lsn_max"),
-            F.collect_set("_bucket").alias("buckets"),
-            F.avg(
-                sum(
-                    (F.length(F.col(k).cast("string")) for k in keys), F.lit(0)
-                )
-            ).alias("kw"),
+            F.collect_set(table.bucket_expr(m)).alias("buckets"),
         ).collect()[0]
-        n_keys = agg["n"]
-        lsn_min, lsn_max = agg["lsn_min"], agg["lsn_max"]
-        if n_keys == 0:
-            deduped.unpersist()
-            return {"skipped": True, "empty": True, "version": m["version"]}
-        affected = sorted(agg["buckets"])
-        key_width = agg["kw"]
-    if n_keys == 0:
+        return _union_merge(table, m, batch, data_cols, stats.asDict(), batch_id)
+    finally:
+        batch.unpersist()
+
+
+def _union_merge(
+    table: LakeTable,
+    m: dict,
+    batch: DataFrame,
+    data_cols: list[str],
+    stats: dict,
+    batch_id: int | None,
+) -> dict:
+    """Resolve `batch` against its affected buckets with the union
+    aggregation and commit the rewritten buckets."""
+    n_rows = stats["n_upper"]
+    if n_rows == 0:
         return {"skipped": True, "empty": True, "version": m["version"]}
+    keys, vf = m["key_fields"], m["version_field"]
+    lsn_min, lsn_max = stats["lsn_min"], stats["lsn_max"]
+    affected = sorted(set(stats["buckets"]))
 
     # tombstones participate so the LSN guard protects deleted keys
-    target = table.read(buckets=affected, include_deleted=True)
-    # strategy: broadcast streams the (possibly huge) affected buckets
-    # map-side against broadcast update keys — right when the batch is
-    # narrow relative to the table. union_agg is one shuffle over
-    # affected-bucket rows + updates — fewer stages, right for bulk
-    # loads and for small affected data. Per-bucket row counts in the
-    # manifest make the decision free.
-    brows = m.get("bucket_rows", {})
-    affected_rows = sum(int(brows.get(str(b), 0)) for b in affected)
-    # byte bound: estimated broadcast size of the update-key set (the
-    # `matched` rel is <= the same size + one long). Unknown width (no
-    # string keys / missing stat) falls back to a conservative 64 bytes.
-    est_key_bytes = n_keys * ((key_width or 64.0) + _KEY_ROW_OVERHEAD)
-    if (
-        n_keys > BROADCAST_KEY_LIMIT
-        or est_key_bytes > BROADCAST_BYTES_CAP
-        or affected_rows <= 4 * n_keys
-    ):
-        strategy = "union_agg"
-    else:
-        strategy = "broadcast"
+    t_side = table.read(buckets=affected, include_deleted=True).select(
+        *keys,
+        vf,
+        F.lit(1).alias("_src"),  # tie on lsn -> target wins (strict guard)
+        F.lit(0).alias("_op_rank"),
+        *data_cols,
+    )
+    u_side = batch.select(*keys, vf, F.lit(0).alias("_src"), "_op_rank", *data_cols)
+    ordered = F.struct(
+        F.col(vf).alias("_v"),
+        F.col("_src").alias("_s"),
+        F.col("_op_rank").alias("_r"),
+        *[F.col(c).alias(c) for c in data_cols],
+    )
+    won = t_side.unionByName(u_side).groupBy(*keys).agg(F.max(ordered).alias("_w"))
+    resolved = won.select(
+        *keys,
+        F.col("_w._v").alias(vf),
+        *[F.col(f"_w.{c}").alias(c) for c in data_cols],
+    )
 
-    if strategy == "broadcast":
-        # the broadcast plan consumes the decoded batch twice -> cache it
-        if not persisted:
-            deduped = deduped.persist()
-            persisted = True
-        if not pre_deduped and salt and salt > 1:
-            deduped = dedup_updates(
-                deduped, keys, vf, data_cols, salt=None
-            ).withColumn("_bucket", table.bucket_expr(m))
-        upd_keys = F.broadcast(
-            deduped.groupBy(*keys).agg(F.max(vf).alias("_u_lsn"))
-        )
-        t_keep = (
-            target.join(upd_keys, on=keys, how="left")
-            .filter(F.col("_u_lsn").isNull() | (F.col(vf) >= F.col("_u_lsn")))
-            .drop("_u_lsn")
-        )
-        matched = F.broadcast(
-            target.select(*keys, F.col(vf).alias("_t_lsn")).join(
-                F.broadcast(deduped.select(*keys)), on=keys, how="left_semi"
-            )
-        )
-        winners = (
-            deduped.join(matched, on=keys, how="left")
-            .filter(F.col("_t_lsn").isNull() | (F.col("_t_lsn") < F.col(vf)))
-            .select(*keys, vf, *data_cols)
-        )
-        resolved = t_keep.select(*keys, vf, *data_cols).unionByName(winners)
-    else:
-        t_side = target.select(
-            *keys,
-            vf,
-            F.lit(1).alias("_src"),  # tie on lsn -> target wins (strict guard)
-            F.lit(0).alias("_op_rank"),
-            *data_cols,
-        )
-        u_side = deduped.select(
-            *keys, vf, F.lit(0).alias("_src"), "_op_rank", *data_cols
-        )
-        ordered = F.struct(
-            F.col(vf).alias("_v"),
-            F.col("_src").alias("_s"),
-            F.col("_op_rank").alias("_r"),
-            *[F.col(c).alias(c) for c in data_cols],
-        )
-        won = t_side.unionByName(u_side).groupBy(*keys).agg(F.max(ordered).alias("_w"))
-        resolved = won.select(
-            *keys,
-            F.col("_w._v").alias(vf),
-            *[F.col(f"_w.{c}").alias(c) for c in data_cols],
-        )
-
-    # NO repartition before the bucketed write: both plans end in a
-    # groupBy on the keys or keep the per-file bucket clustering, and
-    # bucket ids are pmod of the same Murmur3 hash HashPartitioning uses
-    # (aligned when bucket_count % shuffle.partitions == 0; otherwise
-    # the write only produces extra files)
+    # NO repartition before the bucketed write: the groupBy hash-
+    # partitions its output on the keys with the Murmur3 hash bucket ids
+    # are a pmod of, so each bucket comes from one task (when
+    # bucket_count % shuffle.partitions == 0; otherwise the write only
+    # produces extra files)
     res = table._commit_data(
         resolved.withColumn("_bucket", table.bucket_expr(m)),
         m,
         affected,
-        {"type": "merge", "strategy": strategy, "lsn_range": [lsn_min, lsn_max]},
+        {"type": "merge", "strategy": "union_agg", "lsn_range": [lsn_min, lsn_max]},
         batch_id=batch_id,
         metrics={
             "batch_id": batch_id,
-            "strategy": strategy,
-            "updated_keys": n_keys,
+            "strategy": "union_agg",
+            "updated_keys": n_rows,
             "affected_buckets": len(affected),
             "lsn_min": lsn_min,
             "lsn_max": lsn_max,
         },
     )
-    if persisted:
-        deduped.unpersist()
     return {"skipped": False, **res}
 
 

@@ -545,8 +545,13 @@ class LakeTable:
         if not buckets:
             return {"skipped": True, "version": m["version"]}
         df = transform(self.read(buckets=buckets, include_deleted=True))
+        # the scan packs several buckets' files into one task; hash-
+        # partitioning on the keys puts each bucket in one task (one file)
         res = self._commit_data(
-            df.withColumn("_bucket", self.bucket_expr(m)), m, buckets,
+            df.repartition(m["bucket_count"], *[F.col(k) for k in m["key_fields"]])
+            .withColumn("_bucket", self.bucket_expr(m)),
+            m,
+            buckets,
             {"type": note},
         )
         return {"version": res["version"], "buckets": sorted(buckets)}
