@@ -146,10 +146,12 @@ def _rows(spark, lo, hi, parts, lsn0=0):
 
 def _assert_manifest_matches_files(t):
     """bucket_rows, file_stats and bucket placement agree with the data
-    files the manifest lists."""
+    files the manifest lists; each delta file covers only buckets its
+    commit wrote it for."""
     m = t.manifest()
+    listed = [p for fl in m["buckets"].values() for p in fl] + list(m["deltas"])
     scan = (
-        t.read(include_deleted=True)
+        t._scan(m, listed, True)
         .withColumn("_f", F.input_file_name())
         .groupBy("_f")
         .agg(
@@ -171,6 +173,18 @@ def _assert_manifest_matches_files(t):
             assert m["file_stats"][p] == [r["n"], r["lo"], r["hi"]], p
             n += r["n"]
         assert m["bucket_rows"].get(b, 0) == n, b
+    written = {
+        p: h["lineage"]["delta"]["buckets"]
+        for h in t.history() if h["lineage"].get("mode") == "delta"
+        for p in h["lineage"]["delta"]["files"]
+    }
+    for p, covered in m["deltas"].items():
+        live.add(p)
+        r = got.pop(os.path.abspath(os.path.join(t.root, p)))
+        assert covered and set(covered) <= set(written[p]), p
+        assert set(r["b"]) <= set(written[p]), p
+        assert m["file_stats"][p] == [r["n"], r["lo"], r["hi"]], p
+    assert t.delta_rows() == sum(m["file_stats"][p][0] for p in m["deltas"])
     assert not got  # every scanned file is listed in the manifest
     assert set(m["file_stats"]) == live
     assert all(
@@ -193,17 +207,39 @@ def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
     one_file_per_bucket()
     check(t)
 
+    # a batch narrow next to its buckets appends its winners as a delta
     res = merge_into(t, upd(spark, [
         {"repo": "r5", "path": "p5", "lsn": 5000, "op": "u", "content": "n"},
         {"repo": "r6", "path": "p6", "lsn": 5000, "op": "d"},
     ]), batch_id=2)
-    assert res["strategy"] == "union_agg"
+    assert res["strategy"] == "union_agg" and res["mode"] == "delta"
+    lin = t.history()[-1]["lineage"]
+    affected = sorted({
+        r["_b"] for r in upd(spark, [{"repo": "r5", "path": "p5", "lsn": 0},
+                                     {"repo": "r6", "path": "p6", "lsn": 0}])
+        .select(t.bucket_expr().alias("_b")).collect()
+    })
+    assert lin["delta"]["rows"] == 2 and lin["delta"]["buckets"] == affected
+    assert len(lin["delta"]["files"]) == 1 and "buckets" not in lin
+    check(t)
+
+    # a batch as wide as its one bucket rewrites it (one file) and
+    # drops that bucket from the delta's covered list
+    b5 = upd(spark, [{"repo": "r5", "path": "p5", "lsn": 0}]).select(
+        t.bucket_expr().alias("_b")).collect()[0]["_b"]
+    res = merge_into(t, upd(spark, [
+        {"repo": "r5", "path": "p5", "lsn": 6000 + i, "op": "u", "content": "w"}
+        for i in range(100)
+    ]), batch_id=3)
+    assert res["mode"] == "rewrite"
     one_file_per_bucket()
+    assert list(t.history()[-1]["lineage"]["buckets"]) == [str(b5)]
+    assert all(b5 not in c for c in t.manifest()["deltas"].values())
     check(t)
 
     # new keys over 8 input partitions, no key shuffle: each task writes
     # a file into nearly every bucket -> more than 256 files, one commit
-    res = append_insert(t, _rows(spark, 2000, 10000, 8, lsn0=10000), batch_id=3)
+    res = append_insert(t, _rows(spark, 2000, 10000, 8, lsn0=10000), batch_id=4)
     assert res["rows_written"] == 8000
     written = [
         p for e in t.history()[-1]["lineage"]["buckets"].values()
@@ -214,20 +250,31 @@ def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
 
     # an empty append still commits and advances batch_id
     v = t.current_version()
-    append_insert(t, _rows(spark, 0, 0, 1), batch_id=4)
-    assert t.current_version() == v + 1 and t.manifest()["batch_id"] == 4
+    append_insert(t, _rows(spark, 0, 0, 1), batch_id=5)
+    assert t.current_version() == v + 1 and t.manifest()["batch_id"] == 5
     check(t)
 
+    # r5/p5's delta row is stale (its bucket was folded above) but may
+    # sit in a file still covering r6/p6's bucket: a hard delete of
+    # r5/p5 must not resurface it
     t.delete_keys(spark.createDataFrame(
-        [("r7", "p7"), ("r8", "p2045")], "repo string, path string"
+        [("r7", "p7"), ("r8", "p2045"), ("r5", "p5")], "repo string, path string"
     ))
     check(t)
+    assert t.read(include_deleted=True).filter(
+        (F.col("repo") == "r5") & (F.col("path") == "p5")
+    ).count() == 0
 
     n_files = sum(len(fl) for fl in t.manifest()["buckets"].values())
     assert not t.compact(max_files=1).get("skipped")
     assert sum(len(fl) for fl in t.manifest()["buckets"].values()) < n_files
     assert all(len(fl) <= 1 for fl in t.manifest()["buckets"].values())
+    assert t.manifest()["deltas"] == {}   # compaction folds every delta
     check(t)
+    rows = t.read(include_deleted=True).filter(
+        F.col("path").isin("p5", "p6")).collect()
+    assert [(r["path"], r["lsn"], r["_deleted"]) for r in rows] == [
+        ("p6", 5000, True)]
 
     t.rebucket(16)
     m = t.manifest()
@@ -237,4 +284,4 @@ def test_manifest_matches_files_after_every_commit_kind(spark, tmp_path):
     assert m["lineage"]["type"] == "rebucket"
     assert all(e["replaced"] == [] for e in m["lineage"]["buckets"].values())
     check(t)
-    assert t.read(include_deleted=True).count() == 9998
+    assert t.read(include_deleted=True).count() == 9997

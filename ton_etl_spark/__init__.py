@@ -4,7 +4,8 @@ A from-scratch rebuild of the capabilities of re-doubt/ton-etl (see
 /root/repo/SURVEY.md): a change-event log (insert/update/delete/rename/
 schema-change events keyed by (repo, path)) is tailed with Structured
 Streaming, decoded by per-event-type vectorized Arrow parsers, deduped by
-LSN, and applied to a bucketed copy-on-write lake table via an idempotent,
+LSN, and applied to a bucketed lake table (copy-on-write buckets plus
+merge-on-read delta files) via an idempotent,
 last-writer-wins MERGE with exactly-once commit semantics — the Spark-first
 re-expression of ton-etl's Kafka -> parser -> Postgres-upsert -> datalake
 pipeline (reference: parser/main.py, datalake/main.py).

@@ -111,8 +111,16 @@ def main(argv: list[str] | None = None) -> int:
         table.read(version=args.version).show(args.limit, truncate=40)
         return 0
     if args.cmd == "history":
+        # write mode per data commit (DDL commits have none): "rewrite"
+        # replaced bucket files, "delta" appended the batch's winners
         for h in table.history():
-            print(json.dumps(h))
+            delta = h["lineage"].get("delta", {})
+            print(json.dumps(dict(
+                h,
+                mode=h["lineage"].get("mode"),
+                delta_files=len(delta.get("files", [])),
+                delta_rows=delta.get("rows", 0),
+            )))
         return 0
     if args.cmd == "feed":
         feed = table.read_changes(args.since)

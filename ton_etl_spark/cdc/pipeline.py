@@ -477,6 +477,14 @@ def apply_batch(
             ).alias("_bl_ok"),
         ]
     bucket = table.bucket_expr(m)
+    # each sink's merge stats (row bound, LSN range, buckets) ride this
+    # aggregation too, so no sink merge persists or runs a stats job
+    golds = (
+        list(gold) if isinstance(gold, (list, tuple))
+        else ([gold] if gold is not None else [])
+    )
+    silver_stats = fanout.control_stats(mature) if fanout is not None else {}
+    gold_stats = {g.name: g.control_stats(mature) for g in golds}
     bucket_new = F.pmod(
         F.hash(F.col("repo"), F.get_json_object("payload", "$.new_path")),
         F.lit(m["bucket_count"]),
@@ -502,6 +510,8 @@ def apply_batch(
         # zero extra jobs
         F.max("lsn").alias("_lsn_max_seen"),
         F.count(F.when(~mature, F.lit(1))).alias("_n_immature"),
+        *[c.alias(f"_silver_{n}") for n, c in silver_stats.items()],
+        *[c.alias(f"_gold_{n}") for n, c in gold_stats.items()],
         F.collect_list(
             F.when(
                 is_ctl,
@@ -618,14 +628,14 @@ def apply_batch(
     types_present = set(row0["types"] or [])
     if fanout is not None:
         result["silver"] = fanout.apply(
-            events, batch_id=batch_id, types_present=types_present
+            events, batch_id=batch_id, types_present=types_present,
+            precomputed={n: row0[f"_silver_{n}"].asDict() for n in silver_stats},
         )
-    golds = (
-        list(gold) if isinstance(gold, (list, tuple))
-        else ([gold] if gold is not None else [])
-    )
     gres = {
-        g.name: g.update(events, batch_id=batch_id, lsn_max=row0["lsn_max_all"])
+        g.name: g.update(
+            events, batch_id=batch_id, lsn_max=row0["lsn_max_all"],
+            precomputed=row0[f"_gold_{g.name}"].asDict(),
+        )
         for g in golds
         if types_present & set(g.trigger_types)
     }

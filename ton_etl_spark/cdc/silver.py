@@ -28,7 +28,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..lake.merge import merge_into
+from ..lake.merge import batch_stats, merge_into
 from ..lake.table import LakeTable
 from .parsers import csv_struct, debezium_decimal, debezium_double, unpack_zb64
 
@@ -160,6 +160,10 @@ class SilverSpec:
     schema: T.StructType
     key_fields: list[str]
     parse: Callable[[DataFrame], DataFrame]
+    # the key values as expressions over the RAW events (same types as
+    # the parsed keys): the pipeline's control aggregation computes
+    # this table's merge stats from them
+    raw_keys: Callable[[], list["F.Column"]]
     # E8: optional enrichment hook — a callable producing the uri Column
     # to resolve for each parsed row. Active only when the fanout is
     # constructed with resolvers; the stage degrades NonCritically
@@ -169,14 +173,21 @@ class SilverSpec:
 
 
 SILVER_SPECS = [
-    SilverSpec("trades", "trade_event", TRADES_SCHEMA, ["trade_id"], parse_trades),
+    SilverSpec(
+        "trades", "trade_event", TRADES_SCHEMA, ["trade_id"], parse_trades,
+        lambda: [F.col("lsn")],
+    ),
     SilverSpec(
         "metadata", "metadata_event", METADATA_SCHEMA, ["repo"], parse_metadata,
+        lambda: [F.col("repo")],
         enrich_uri=lambda: F.concat(
             F.lit("ipfs://"), F.col("sources").getField("image")
         ),
     ),
-    SilverSpec("comments", "comment_event", COMMENTS_SCHEMA, ["comment_id"], parse_comments),
+    SilverSpec(
+        "comments", "comment_event", COMMENTS_SCHEMA, ["comment_id"],
+        parse_comments, lambda: [F.col("lsn")],
+    ),
 ]
 
 
@@ -228,12 +239,28 @@ class SilverFanout:
                             )
                 self.tables[s.name] = table
 
+    def control_stats(self, mature: "F.Column") -> dict[str, "F.Column"]:
+        """Per table: its merge stats as one aggregate column over the
+        raw events (lake/merge.py `batch_stats`), for the pipeline's
+        control aggregation."""
+        return {
+            s.name: batch_stats(
+                mature & (F.col("event_type") == s.event_type),
+                self.tables[s.name].bucket_expr(keys=s.raw_keys()),
+            )
+            for s in self.specs
+        }
+
     def apply(
         self,
         events: DataFrame,
         batch_id: int | None,
         types_present: set[str] | None = None,
+        precomputed: dict[str, dict] | None = None,
     ) -> dict:
+        """Merge each spec's parsed events into its table. `precomputed`
+        maps a table name to its `control_stats` values, which spare
+        that merge its own persist and stats job."""
         from ..operators.enrichment import enrich
 
         out = {}
@@ -250,6 +277,7 @@ class SilverFanout:
                     retries=self.enrich_retries,
                 ).drop("_uri")
             out[s.name] = merge_into(
-                self.tables[s.name], parsed, batch_id=batch_id
+                self.tables[s.name], parsed, batch_id=batch_id,
+                precomputed=(precomputed or {}).get(s.name),
             )
         return out

@@ -1,17 +1,18 @@
-"""Streaming hot-key detection (frequency sketch) for merge-shuffle salting.
+"""Streaming hot-key detection for merge-shuffle salting.
 
 The reference's only skew story is raising Kafka message limits for
 mega account states (README.md:30-39); the north rule requires explicit
-detection + salting. We use Spark's built-in frequent-items sketch
-(`DataFrame.stat.freqItems`, the Karp-Shenker-Papadimitriou one-pass
-algorithm) over a sample of the batch: any key exceeding the support
-threshold triggers two-phase (salted) pre-aggregation in the merge
-(lake/merge.py::dedup_updates).
+detection + salting. Detection counts keys exactly over a sample of the
+batch (one aggregation job): any key holding at least `support` of the
+sampled rows triggers two-phase (salted) pre-aggregation in the merge
+(lake/merge.py::dedup_updates). An approximate frequent-items sketch is
+not used: its surviving counters include false positives, so it fired
+on every uniform batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 KEY_SEP = "\x00"
 
@@ -22,14 +23,23 @@ def detect_hot_keys(
     support: float = 0.05,
     sample_fraction: float = 0.2,
 ) -> list[str]:
+    """Keys (joined by KEY_SEP) holding at least `support` of the
+    sampled rows."""
     s = df if sample_fraction >= 1.0 else df.sample(fraction=sample_fraction, seed=7)
-    s = s.withColumn("_k", F.concat_ws(KEY_SEP, *[F.col(k) for k in keys]))
-    row = s.stat.freqItems(["_k"], support=support).collect()[0]
-    items = row[0] or []
-    # freqItems over-approximates; keep it cheap and treat any hit as
-    # "salting worthwhile" — salting a non-skewed batch is merely one
-    # extra tiny shuffle stage.
-    return [i for i in items if i]
+    # coalesce(1) hands the window the single partition it needs
+    # without a second exchange: one shuffle, as for an aggregate
+    counts = s.groupBy(
+        F.concat_ws(KEY_SEP, *[F.col(k) for k in keys]).alias("_k")
+    ).count().coalesce(1)
+    rows = (
+        counts.withColumn(
+            "_total", F.sum("count").over(Window.partitionBy(F.lit(0)))
+        )
+        .filter(F.col("count") >= F.lit(support) * F.col("_total"))
+        .select("_k")
+        .collect()
+    )
+    return [r["_k"] for r in rows if r["_k"]]
 
 
 class HotKeyMonitor:

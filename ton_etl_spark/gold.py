@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .lake.merge import merge_into
+from .lake.merge import batch_stats, merge_into
 from .lake.table import LakeTable
 from .operators.decayed import time_decayed_avg
 
@@ -42,7 +42,52 @@ GOLD_PRICE_SCHEMA = T.StructType(
 _TRADE_HEAD = T.StructType([T.StructField("asset", T.StringType())])
 
 
-class GoldDecayedPrice:
+def _trade_asset():
+    """A trade event's asset — a JVM-only JSON field extraction, no
+    pandas decode."""
+    return F.from_json("payload", _TRADE_HEAD).getField("asset")
+
+
+class _GoldSink:
+    """What both maintainers share: the merge stats and the update.
+    Subclasses give `key_columns()`, the gold table's keys as
+    expressions over raw trade events, and `recompute_for(touched,
+    version_lsn)`, the gold rows of the touched keys."""
+
+    def control_stats(self, mature):
+        """This table's merge stats as one aggregate column over the
+        raw events (lake/merge.py `batch_stats`), for the pipeline's
+        control aggregation."""
+        return batch_stats(
+            mature & F.col("event_type").isin(*self.trigger_types),
+            self.table.bucket_expr(keys=self.key_columns()),
+        )
+
+    def update(self, events: DataFrame, batch_id: int | None, lsn_max,
+               precomputed: dict | None = None) -> dict:
+        """Recompute the groups the batch's trades touch and merge them.
+        `precomputed` holds this table's `control_stats` values; the
+        recompute rows all carry `lsn_max`, which becomes their range."""
+        m = self.table.manifest()
+        if batch_id is not None and batch_id <= m["batch_id"]:
+            return {"skipped": True, "batch_id": batch_id}
+        names = self.table.key_fields()
+        touched = (
+            events.filter(F.col("event_type") == "trade_event")
+            .select(*[c.alias(n) for c, n in zip(self.key_columns(), names)])
+            .distinct()
+        )
+        updates = self.recompute_for(touched, int(lsn_max))
+        if precomputed is not None:
+            precomputed = dict(
+                precomputed, lsn_min=int(lsn_max), lsn_max=int(lsn_max)
+            )
+        return merge_into(
+            self.table, updates, batch_id=batch_id, precomputed=precomputed
+        )
+
+
+class GoldDecayedPrice(_GoldSink):
     """agg_prices analogue: per (asset, tumbling window) decayed
     volume-weighted average price, maintained incrementally."""
 
@@ -96,25 +141,11 @@ class GoldDecayedPrice:
             F.lit("u").alias("op"),
         )
 
-    def update(self, events: DataFrame, batch_id: int | None, lsn_max) -> dict:
-        m = self.table.manifest()
-        if batch_id is not None and batch_id <= m["batch_id"]:
-            return {"skipped": True, "batch_id": batch_id}
-        # affected windows from the RAW batch events — a JVM-only JSON
-        # field extraction, no pandas decode
-        asset = F.from_json("payload", _TRADE_HEAD).getField("asset")
-        touched = (
-            events.filter(F.col("event_type") == "trade_event")
-            .select(
-                asset.alias("asset"),
-                self._window_start((F.col("ts_ms") / 1000).cast("long")).alias(
-                    "window_start"
-                ),
-            )
-            .distinct()
-        )
-        updates = self.recompute_for(touched, int(lsn_max))
-        return merge_into(self.table, updates, batch_id=batch_id)
+    def key_columns(self) -> list:
+        return [
+            _trade_asset(),
+            self._window_start((F.col("ts_ms") / 1000).cast("long")),
+        ]
 
     def full_recompute(self) -> DataFrame:
         """Batch recompute over ALL silver trades (the parity oracle for
@@ -137,7 +168,7 @@ GOLD_TVL_SCHEMA = T.StructType(
 )
 
 
-class GoldAssetTvl:
+class GoldAssetTvl(_GoldSink):
     """dex_pool TVL analogue (reference README.md:240-257,
     parsers/accounts/tvl.py): per-asset total locked value, updated
     after every batch that trades the asset. The reference's
@@ -202,18 +233,8 @@ class GoldAssetTvl:
             )
         )
 
-    def update(self, events: DataFrame, batch_id: int | None, lsn_max) -> dict:
-        m = self.table.manifest()
-        if batch_id is not None and batch_id <= m["batch_id"]:
-            return {"skipped": True, "batch_id": batch_id}
-        asset = F.from_json("payload", _TRADE_HEAD).getField("asset")
-        touched = (
-            events.filter(F.col("event_type") == "trade_event")
-            .select(asset.alias("asset"))
-            .distinct()
-        )
-        updates = self.recompute_for(touched, int(lsn_max))
-        return merge_into(self.table, updates, batch_id=batch_id)
+    def key_columns(self) -> list:
+        return [_trade_asset()]
 
     def full_recompute(self) -> DataFrame:
         return self.trades.read().groupBy("asset").agg(

@@ -14,10 +14,11 @@ the reference's consumer contract. Downstream exactly-once comes from
 pairing it with an idempotent sink (an LSN-guarded `merge_into`), the
 same layering as the reference's at-least-once Kafka consume + `ON
 CONFLICT` upsert (db.py:197-214); that sink also absorbs the carried
-rows copy-on-write rewrites redeliver.
+rows redelivered by bucket-rewrite commits. Only rewrite commits carry
+rows: a delta commit's files hold exactly the batch's winners.
 
 Scale shape: a poll reads only the files the polled commits wrote (in
-steady state, the recently rewritten buckets), zero driver loops, no
+steady state, the narrow commits' delta files), zero driver loops, no
 extra jobs on idle polls. Many independent consumers (one cursor dir
 each) can tail one table without coordination — commits are immutable
 snapshots.

@@ -22,15 +22,26 @@ detected hot keys a salted phase 1 runs first (north rule skew
 handling): it collapses (key, salt) groups, spreading a mega-key over
 `salt` reducers, and the union aggregation finishes the job.
 
-The aggregation's output is hash-partitioned on the keys by the same
-Murmur3 hash the buckets use, so each rewritten bucket (copy-on-write)
-is written as one file, and the commit is atomic with per-bucket
-lineage and a metrics row.
+The target side is every stored row of the affected buckets: base
+files and the delta files still covering them, unresolved, since the
+aggregation resolves anyway. Its result is written one of two ways:
+
+  * delta (merge-on-read): when the batch's row bound is below the
+    affected buckets' base rows, only the rows the batch won (`_s = 0`,
+    tombstones included) are appended as unbucketed delta files. The
+    write then scales with the batch, not with the buckets it touches.
+  * rewrite (copy-on-write): otherwise, or once the table's delta rows
+    reach its base rows, every affected bucket is rewritten and its
+    deltas are folded. The aggregation's output is hash-partitioned on
+    the keys by the same Murmur3 hash the buckets use, so each
+    rewritten bucket is written as one file.
+
+Either commit is atomic with lineage and a metrics row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .table import LakeTable
 
@@ -102,6 +113,20 @@ def dedup_updates(
             return phase1
         return expand(phase1.groupBy(*keys).agg(F.max(ordered).alias("_w")))
     return expand(updates.groupBy(*keys).agg(F.max(ordered).alias("_w")))
+
+
+def batch_stats(rows: Column, bucket: Column) -> Column:
+    """The stats `merge_into` takes as `precomputed`, as ONE aggregate
+    column over the raw events a batch is parsed from: the row bound,
+    LSN range and bucket set over the events where `rows` holds. A
+    caller folds it into an aggregation it runs anyway, so the merge
+    needs no persist and no stats job of its own."""
+    return F.struct(
+        F.count(F.when(rows, 1)).alias("n_upper"),
+        F.min(F.when(rows, F.col("lsn"))).alias("lsn_min"),
+        F.max(F.when(rows, F.col("lsn"))).alias("lsn_max"),
+        F.collect_set(F.when(rows, bucket)).alias("buckets"),
+    )
 
 
 def merge_into(
@@ -177,16 +202,23 @@ def _union_merge(
     batch_id: int | None,
 ) -> dict:
     """Resolve `batch` against its affected buckets with the union
-    aggregation and commit the rewritten buckets."""
+    aggregation and commit the batch's winners as a delta, or the
+    rewritten buckets (see the module docstring for the choice)."""
     n_rows = stats["n_upper"]
     if n_rows == 0:
         return {"skipped": True, "empty": True, "version": m["version"]}
     keys, vf = m["key_fields"], m["version_field"]
     lsn_min, lsn_max = stats["lsn_min"], stats["lsn_max"]
     affected = sorted(set(stats["buckets"]))
+    base_rows = {int(b): int(n) for b, n in m.get("bucket_rows", {}).items()}
+    delta = (
+        n_rows < sum(base_rows.get(b, 0) for b in affected)
+        and table.delta_rows(m) < sum(base_rows.values())
+    )
 
-    # tombstones participate so the LSN guard protects deleted keys
-    t_side = table.read(buckets=affected, include_deleted=True).select(
+    # raw rows: tombstones participate so the LSN guard protects deleted
+    # keys, and superseded rows simply lose the aggregation
+    t_side = table._raw(m, affected)[0].select(
         *keys,
         vf,
         F.lit(1).alias("_src"),  # tie on lsn -> target wins (strict guard)
@@ -201,6 +233,8 @@ def _union_merge(
         *[F.col(c).alias(c) for c in data_cols],
     )
     won = t_side.unionByName(u_side).groupBy(*keys).agg(F.max(ordered).alias("_w"))
+    if delta:
+        won = won.filter(F.col("_w._s") == 0)
     resolved = won.select(
         *keys,
         F.col("_w._v").alias(vf),
@@ -211,13 +245,14 @@ def _union_merge(
     # partitions its output on the keys with the Murmur3 hash bucket ids
     # are a pmod of, so each bucket comes from one task (when
     # bucket_count % shuffle.partitions == 0; otherwise the write only
-    # produces extra files)
+    # produces extra files). A delta is written as AQE coalesced it.
     res = table._commit_data(
-        resolved.withColumn("_bucket", table.bucket_expr(m)),
+        resolved if delta else resolved.withColumn("_bucket", table.bucket_expr(m)),
         m,
-        affected,
+        () if delta else affected,
         {"type": "merge", "strategy": "union_agg", "lsn_range": [lsn_min, lsn_max]},
         batch_id=batch_id,
+        covers=affected if delta else None,
         metrics={
             "batch_id": batch_id,
             "strategy": "union_agg",

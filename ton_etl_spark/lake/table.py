@@ -1,5 +1,6 @@
-"""A minimal lakehouse table format: bucketed copy-on-write parquet with
-atomic manifest commits, field-id schema evolution, and time travel.
+"""A minimal lakehouse table format: bucketed parquet with copy-on-write
+bucket rewrites and merge-on-read delta files, atomic manifest commits,
+field-id schema evolution, and time travel.
 
 Why hand-rolled: the engine targets Iceberg `MERGE INTO` semantics
 (BASELINE.json north_rule) but must run self-contained; this module
@@ -10,6 +11,18 @@ implements the same contract on plain parquet:
     MERGE touches only the buckets containing changed keys — at 100 TB
     / 64k buckets a CDC micro-batch rewrites a tiny fraction of the
     table;
+  * a data commit either rewrites whole buckets (copy-on-write) or, for
+    a batch that is narrow next to the buckets it touches, appends one
+    or a few unbucketed DELTA files holding only the batch's winning
+    rows (tombstones included). The manifest lists, per delta file, the
+    buckets it still covers. Reads of covered buckets union base and
+    delta rows and keep each key's max-version row; buckets no delta
+    covers keep the plain scan. A bucket rewrite folds the deltas it
+    covers and drops that bucket from every delta file's list; the
+    reference's lake is merge-on-read the same way (append-only files,
+    folded later by a rank-1 snapshot job,
+    datalake/metadata_snapshot.py:93-105), as are Iceberg v2 row-level
+    deletes;
   * every commit writes new files plus a JSON manifest and atomically
     swaps a `_current` pointer (os.replace) — readers always see a
     consistent snapshot; old versions remain readable (time travel).
@@ -36,10 +49,15 @@ implements the same contract on plain parquet:
     — the complete consumer-offset feed (see `lake/consumer.py`).
 
 Layout:
-    <root>/_versions/v<N>.json     commit manifests
-    <root>/_current                text file holding latest version number
-    <root>/_metrics/*.json         one metrics row per commit
-    <root>/data/v<N>/_bucket=<i>/  parquet files written by commit N
+    <root>/_versions/v<N>.json            commit manifests
+    <root>/_current                       text file holding latest version number
+    <root>/_metrics/*.json                one metrics row per commit
+    <root>/data/v<N>/<hex>/_bucket=<i>/   bucket files written by commit N
+    <root>/data/v<N>/<hex>/_delta/        delta files written by commit N
+
+`<hex>` is fresh per write attempt: a replay after a crash between the
+file write and the manifest swap writes beside the unreferenced files
+of the dead attempt (vacuum removes them) instead of failing on them.
 
 The table root must be a local or mounted filesystem shared by the
 driver and every executor: executors write the data files, and the
@@ -71,8 +89,9 @@ _WIDENINGS = {
 
 
 class LakeTable:
-    """A bucketed copy-on-write table rooted at `root`, a path on a
-    filesystem shared by driver and executors (see the module docstring)."""
+    """A bucketed table with copy-on-write and delta commits rooted at
+    `root`, a path on a filesystem shared by driver and executors (see
+    the module docstring)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -122,6 +141,7 @@ class LakeTable:
             "bucket_count": bucket_count,
             "buckets": {},
             "bucket_rows": {},
+            "deltas": {},
             "file_stats": {},
             "lineage": {},
         }
@@ -251,15 +271,19 @@ class LakeTable:
 
     # -- reads ----------------------------------------------------------------
 
-    def bucket_expr(self, m: dict | None = None) -> Column:
+    def bucket_expr(
+        self, m: dict | None = None, keys: list[Column] | None = None
+    ) -> Column:
         """Bucket id of a row. Uses Spark's Murmur3 `hash` (the SAME
         function HashPartitioning uses, seed 42): with bucket_count a
         multiple of spark.sql.shuffle.partitions, every row of a bucket
         lands in one reducer of any groupBy/repartition on the key
         columns, so the bucketed write needs NO extra shuffle after the
-        merge aggregation (pmod(h, P) == pmod(pmod(h, k*P), P))."""
+        merge aggregation (pmod(h, P) == pmod(pmod(h, k*P), P)).
+        `keys` gives the key values as other expressions of the same
+        types (e.g. over the raw events a batch is parsed from)."""
         m = m or self.manifest()
-        keys = [F.col(k) for k in m["key_fields"]]
+        keys = keys or [F.col(k) for k in m["key_fields"]]
         return F.pmod(F.hash(*keys), F.lit(m["bucket_count"])).cast("int")
 
     def read(
@@ -277,6 +301,12 @@ class LakeTable:
         require a rewrite. Tombstoned rows are filtered unless
         `include_deleted` (the merge path reads them to keep LSN guards
         effective across deletes).
+
+        Buckets covered by delta files are resolved: base and delta rows
+        are unioned and each key keeps its max-version row, before the
+        tombstone filter. A delta row is strictly newer than every row
+        it beat, so this is the merge's own winner. Buckets no delta
+        covers are a plain scan with no shuffle.
 
         `min_version_exclusive` skips whole files whose recorded
         version-field max is <= the cutoff (manifest file_stats) — file
@@ -298,14 +328,62 @@ class LakeTable:
             # no stats recorded -> must read the file
             return st is not None and st[2] is not None and st[2] <= min_version_exclusive
 
-        files = [
+        df, has_deltas = self._raw(m, buckets, skip)
+        if has_deltas:
+            df = self._resolve(m, df)
+        return df if include_deleted else self._live(df)
+
+    def _raw(
+        self, m: dict, buckets: list[int] | None, skip=lambda p: False
+    ) -> tuple[DataFrame, bool]:
+        """Every stored row of `buckets` (all when None) under manifest
+        `m`, tombstones and superseded rows included, and whether any
+        delta file was read. Delta files are read per distinct set of
+        still-covered requested buckets and filtered to it: a file's
+        rows of a bucket folded since it was written are stale."""
+        base = [
             p
             for b, flist in m["buckets"].items()
             if buckets is None or int(b) in buckets
             for p in flist
             if not skip(p)
         ]
-        return self._scan(m, files, include_deleted)
+        groups: dict[tuple[int, ...], list[str]] = {}
+        for p, covered in m.get("deltas", {}).items():
+            keep = tuple(b for b in covered if buckets is None or b in buckets)
+            if keep and not skip(p):
+                groups.setdefault(keep, []).append(p)
+        df = self._scan(m, base, True)
+        for keep, files in sorted(groups.items()):
+            df = df.unionByName(
+                self._scan(m, files, True).filter(
+                    self.bucket_expr(m).isin(list(keep))
+                )
+            )
+        return df, bool(groups)
+
+    @staticmethod
+    def _resolve(m: dict, df: DataFrame) -> DataFrame:
+        """One row per key: the max-version row (tombstones included)."""
+        keys, vf = m["key_fields"], m["version_field"]
+        names = [f["name"] for f in m["fields"]]
+        rest = [n for n in names if n not in keys and n != vf]
+        won = df.groupBy(*keys).agg(
+            F.max(F.struct(F.col(vf).alias("_v"), *rest)).alias("_w")
+        )
+        return won.select(
+            *[
+                F.col(n) if n in keys
+                else F.col("_w._v" if n == vf else f"_w.{n}").alias(n)
+                for n in names
+            ]
+        )
+
+    @staticmethod
+    def _live(df: DataFrame) -> DataFrame:
+        return df.filter(
+            ~F.coalesce(F.col("_deleted"), F.lit(False))
+        ).drop("_deleted")
 
     def _scan(self, m: dict, files: list[str], include_deleted: bool) -> DataFrame:
         """Read `files` (root-relative) under manifest `m`'s schema."""
@@ -317,30 +395,45 @@ class LakeTable:
             ).select(
                 *[F.col(f"f{f['id']}").alias(f["name"]) for f in m["fields"]]
             )
-        if include_deleted:
-            return df
-        return df.filter(
-            ~F.coalesce(F.col("_deleted"), F.lit(False))
-        ).drop("_deleted")
+        return df if include_deleted else self._live(df)
+
+    def delta_rows(self, m: dict | None = None) -> int:
+        """Rows in the delta files still covering some bucket."""
+        m = m or self.manifest()
+        stats = m.get("file_stats", {})
+        return sum(int(stats.get(p, [0])[0]) for p in m.get("deltas", {}))
 
     # -- writes ----------------------------------------------------------------
 
     def write_buckets(
-        self, df: DataFrame, bucket_col: str, version: int
+        self, df: DataFrame, bucket_col: str | None, version: int
     ) -> tuple[dict[str, list[str]], dict[str, int], dict[str, list]]:
-        """Write `df` partitioned by bucket under data/v<version>/ and return
-        ({bucket: [relative file paths]}, {bucket: row count},
-        {relative file path: [rows, min_vf, max_vf]}) for the manifest.
+        """Write `df` partitioned by bucket under a fresh
+        data/v<version>/<hex>/ and return ({bucket: [relative file
+        paths]}, {bucket: row count}, {relative file path: [rows,
+        min_vf, max_vf]}) for the manifest. With `bucket_col` None the
+        rows are written unpartitioned as delta files under
+        data/v<version>/<hex>/_delta/ and only the stats map is filled.
         Physical column names (f<id>) are applied here. The per-file
         version-field range powers file skipping in `read_changes`
         (Iceberg-manifest-style column stats, collected from the parquet
         footers the commit already reads for row counts — no extra I/O)."""
         m = self.manifest()
-        out_dir = os.path.join(self.root, "data", f"v{version}")
+        out_dir = os.path.join(
+            self.root, "data", f"v{version}", uuid.uuid4().hex[:12]
+        )
         phys_cols = [
             F.col(f["name"]).cast(spark_type_from_string(f["type"])).alias(f"f{f['id']}")
             for f in m["fields"]
         ]
+        if bucket_col is None:
+            out_dir = os.path.join(out_dir, "_delta")
+            df.select(*phys_cols).write.parquet(out_dir, compression="zstd")
+            files = [
+                os.path.relpath(p, self.root)
+                for p in glob.glob(os.path.join(out_dir, "*.parquet"))
+            ]
+            return {}, {}, self._footer_scan(files, m)
         (
             df.select(*phys_cols, F.col(bucket_col).alias("_bucket"))
             .write.partitionBy("_bucket")
@@ -409,21 +502,32 @@ class LakeTable:
         lineage: dict,
         batch_id: int | None = None,
         metrics: dict | None = None,
+        covers: Iterable[int] | None = None,
     ) -> dict:
-        """The one data-commit rule: write `df` (with a `_bucket` column)
-        as version `base.version + 1`, then commit the child of `base`.
+        """The one data-commit rule: write `df` as version
+        `base.version + 1`, then commit the child of `base`.
 
-        Each bucket's files are base's files (none if the bucket is in
-        `replace`) plus the files written now; rows follow the same
-        rule. `file_stats` keeps the entries of live files and adds the
-        new ones. Lineage is `lineage` plus a {files, rows, replaced}
-        entry per replaced or written bucket. Returns the metrics row:
-        `metrics` plus version, rows_written, buckets_written and
-        write_ms; it is stored beside the commit only if `metrics` is
-        given."""
+        Without `covers` (mode "rewrite"), `df` carries a `_bucket`
+        column. Each bucket's files are base's files (none if the bucket
+        is in `replace`) plus the files written now; rows follow the
+        same rule. A replaced bucket is dropped from every delta file's
+        covered list (its rewrite folded them); a delta file left
+        covering nothing leaves the manifest. Lineage gets a
+        {files, rows, replaced} entry per replaced or written bucket.
+
+        With `covers` (mode "delta"), `df` has no `_bucket` column and
+        is appended as delta files covering those buckets; `replace`
+        must be empty. Lineage gets one {files, rows, buckets} entry.
+
+        `file_stats` keeps the entries of live files and adds the new
+        ones. Returns the metrics row: `metrics` plus version, mode,
+        rows_written, buckets_written, delta_files and write_ms; it is
+        stored beside the commit only if `metrics` is given."""
         version = base["version"] + 1
         t_write = time.time()
-        file_map, rows_map, stats_map = self.write_buckets(df, "_bucket", version)
+        file_map, rows_map, stats_map = self.write_buckets(
+            df, None if covers is not None else "_bucket", version
+        )
         write_ms = int((time.time() - t_write) * 1000)
 
         replace = {str(b) for b in replace}
@@ -442,15 +546,38 @@ class LakeTable:
                 "rows": rows,
                 "replaced": base["buckets"].get(b, []) if b in replace else [],
             }
+        deltas = {}
+        for p, covered in base.get("deltas", {}).items():
+            keep = [b for b in covered if str(b) not in replace]
+            if keep:
+                deltas[p] = keep
+        if covers is not None:
+            # an empty result still leaves one schema-only file: keep it
+            # out of the manifest (vacuum removes it)
+            new = sorted(p for p, st in stats_map.items() if st[0])
+            covered = sorted({int(b) for b in covers})
+            deltas.update({p: covered for p in new})
+            written = {
+                "mode": "delta",
+                "delta": {
+                    "files": new,
+                    "rows": sum(stats_map[p][0] for p in new),
+                    "buckets": covered,
+                },
+            }
+        else:
+            new = []
+            written = {"mode": "rewrite", "buckets": per_bucket}
         all_stats = {**base.get("file_stats", {}), **stats_map}
-        file_stats = {
-            p: all_stats[p] for fl in buckets.values() for p in fl if p in all_stats
-        }
+        live = [p for fl in buckets.values() for p in fl] + list(deltas)
+        file_stats = {p: all_stats[p] for p in live if p in all_stats}
         row = dict(
             metrics or {},
             version=version,
-            rows_written=sum(rows_map.values()),
+            mode=written["mode"],
+            rows_written=sum(st[0] for st in stats_map.values()),
             buckets_written=len(file_map),
+            delta_files=len(new),
             write_ms=write_ms,
         )
         self.commit(
@@ -461,8 +588,9 @@ class LakeTable:
                 batch_id=base["batch_id"] if batch_id is None else batch_id,
                 buckets=buckets,
                 bucket_rows=bucket_rows,
+                deltas=deltas,
                 file_stats=file_stats,
-                lineage=dict(lineage, buckets=per_bucket),
+                lineage=dict(lineage, **written),
             ),
             row if metrics is not None else None,
         )
@@ -508,7 +636,8 @@ class LakeTable:
         tracks COMMITS instead, so it is complete under arbitrary event
         reordering — the trade is redelivery of carried rows from
         rewritten buckets (copy-on-write copies old rows into new
-        files), which an idempotent LWW sink absorbs. This is the
+        files), which an idempotent LWW sink absorbs. A delta commit
+        carries nothing: its files hold exactly the batch's winners. This is the
         consumer-offset contract: at-least-once, nothing lost — the
         same pairing the reference uses (Kafka offsets + ON CONFLICT,
         parser/main.py:85-90, db.py:197-214). Iceberg's incremental
@@ -516,8 +645,9 @@ class LakeTable:
         copy-on-write tables.
 
         Cost shape: per poll, exactly the files the polled commits
-        wrote — in steady state the recently rewritten buckets, never
-        the table. DDL commits write no files and contribute nothing.
+        wrote — the delta files of narrow commits and the rewritten
+        buckets of wide ones, never the table. DDL commits write no
+        files and contribute nothing.
         """
         v = self.current_version() if version is None else version
         horizon = self.vacuum_horizon()
@@ -530,7 +660,8 @@ class LakeTable:
         files: list[str] = []
         for vv in range(since_version + 1, v + 1):
             pref = os.path.join("data", f"v{vv}") + os.sep
-            for flist in self.manifest(vv)["buckets"].values():
+            mv = self.manifest(vv)
+            for flist in [*mv["buckets"].values(), mv.get("deltas", {})]:
                 files.extend(p for p in flist if p.startswith(pref))
         return self._scan(self.manifest(v), files, include_deleted)
 
@@ -540,7 +671,9 @@ class LakeTable:
         self, buckets: list[int], transform, note: str
     ) -> dict:
         """Copy-on-write rewrite of selected buckets through `transform`
-        (DataFrame -> DataFrame), committed with lineage `note`."""
+        (DataFrame -> DataFrame), committed with lineage `note`. The
+        transform sees the resolved rows, so the rewrite folds the
+        buckets' deltas."""
         m = self.manifest()
         if not buckets:
             return {"skipped": True, "version": m["version"]}
@@ -583,7 +716,10 @@ class LakeTable:
         standard tombstone-retention tradeoff)."""
         m = self.manifest()
         vf = m["version_field"]
-        buckets = [int(b) for b, fl in m["buckets"].items() if fl]
+        buckets = sorted(
+            {int(b) for b, fl in m["buckets"].items() if fl}
+            | self._delta_buckets(m)
+        )
 
         def drop(df):
             return df.filter(
@@ -612,7 +748,10 @@ class LakeTable:
         if new_bucket_count < 1:
             raise ValueError(f"bucket_count must be >= 1, got {new_bucket_count}")
         df = self.read(include_deleted=True)
-        base = dict(m, bucket_count=new_bucket_count, buckets={}, bucket_rows={})
+        base = dict(
+            m, bucket_count=new_bucket_count, buckets={}, bucket_rows={},
+            deltas={},
+        )
         res = self._commit_data(
             df.repartition(new_bucket_count, *[F.col(k) for k in m["key_fields"]])
             .withColumn("_bucket", self.bucket_expr(base)),
@@ -628,12 +767,18 @@ class LakeTable:
 
     def compact(self, max_files: int = 1) -> dict:
         """Rewrite buckets fragmented into more than `max_files` files
-        (the reference's snapshot/repartition compaction jobs)."""
+        or covered by delta files (the reference's snapshot/repartition
+        compaction jobs)."""
         m = self.manifest()
-        buckets = [
-            int(b) for b, fl in m["buckets"].items() if len(fl) > max_files
-        ]
+        buckets = sorted(
+            {int(b) for b, fl in m["buckets"].items() if len(fl) > max_files}
+            | self._delta_buckets(m)
+        )
         return self._rewrite_buckets(buckets, lambda df: df, "compact")
+
+    @staticmethod
+    def _delta_buckets(m: dict) -> set[int]:
+        return {b for covered in m.get("deltas", {}).values() for b in covered}
 
     def vacuum(self, keep_last: int = 1) -> int:
         """Delete data files not referenced by the last `keep_last`
@@ -646,10 +791,14 @@ class LakeTable:
         horizon = max(0, cur - keep_last + 1)
         keep: set[str] = set()
         for v in range(horizon, cur + 1):
-            for flist in self.manifest(v)["buckets"].values():
+            mv = self.manifest(v)
+            for flist in mv["buckets"].values():
                 keep.update(flist)
+            keep.update(mv.get("deltas", {}))
         removed = 0
-        for p in glob.glob(os.path.join(self.root, "data", "v*", "_bucket=*", "*.parquet")):
+        for p in glob.glob(
+            os.path.join(self.root, "data", "**", "*.parquet"), recursive=True
+        ):
             if os.path.relpath(p, self.root) not in keep:
                 os.remove(p)
                 removed += 1

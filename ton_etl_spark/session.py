@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap when TON_ETL_DRIVER_MEM is unset: a quarter of
+    the machine's memory, at most 48g. The JVM grows its heap toward
+    the cap before collecting hard, so a cap above the machine's memory
+    gets the process killed on a shared host instead of collected.
+    Without a readable `meminfo` (not Linux), 48g."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(512, min(cap_mb, kb // 1024 // 4))}m"
+
+
 def get_spark(
     app_name: str = "ton_etl_spark",
     cores: int | None = None,
@@ -38,7 +55,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # skew-join mitigation for the batch/gold layer joins
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("TON_ETL_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("TON_ETL_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow transfer for every pandas UDF / applyInPandas stage
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
