@@ -51,7 +51,7 @@ CDC_MFT = int(os.environ.get("BENCH_CDC_MFT", "8"))
 CDC_LEVELS = tuple(
     int(x) for x in os.environ.get("BENCH_CDC_LEVELS", "1,4").split(",")
 )
-# default 5 repeats (r4 verdict "Next round" #2): five interleaved
+# default 5 repeats: five interleaved
 # windows -> five paired ratios with a well-defined single-window
 # median (~48 min at 6M events). 4 was tried first; an even count
 # leaves the median between two windows, and on this host the paired
@@ -128,7 +128,7 @@ def cdc_event_log() -> tuple[str, int]:
     # 250k events/file; CDC_MFT files per trigger -> 2M-event batches
     # at the default mft=8: "warm" is n_batches-1 batches (not 1) and a
     # single host stall lands in one batch instead of dominating the
-    # whole run (r2 verdict "Next round" #3). Batch size re-A/B'd after
+    # whole run. Batch size re-A/B'd after
     # the round-5 codegen flip (BENCH.md 2026-08-20): with codegen on,
     # 1M batches leave the serial floor at ~15% of a local[4] batch and
     # depress the scaling ratio; 2M batches amortize it (0.84 vs 0.78

@@ -64,7 +64,7 @@ def test_blacklist_unit_promotion_rules():
     for b in range(5, 10):
         bl.observe(["repoB"], [], batch_id=b)
     assert "repoB" not in bl.active
-    # replayed/repeated batch_ids never double-count (ADVICE r2)
+    # replayed/repeated batch_ids never double-count
     bl2 = LearnedBlacklist(min_batches=3)
     for _ in range(10):
         bl2.observe(["botC"], [], batch_id=7)   # same epoch replayed
@@ -91,7 +91,7 @@ def test_blacklist_unit_promotion_rules():
 
 
 def test_exclusion_retains_null_repo_rows(spark):
-    """ADVICE r3: once any repo is active, a malformed upsert with NULL
+    """Once any repo is active, a malformed upsert with NULL
     repo made the exclusion predicate NULL (tri-valued logic) and the
     row was silently filtered. Rows the exclusion has no verdict on
     must pass through to the parsers."""

@@ -123,7 +123,7 @@ def test_chained_rename_flood_guard(spark, tmp_path, monkeypatch):
     groups candidate provenance per chain component, bounded by
     MAX_CHAIN_PROVENANCE_ROWS — above the bound the task must FAIL
     LOUDLY (with the evidence) instead of silently building a giant
-    pandas frame (VERDICT r3 "What's wrong" #4). The failure surfaces
+    pandas frame. The failure surfaces
     inside the merge action, so the batch is NOT committed. Below the
     bound the same batch must resolve the chain exactly."""
     import json
@@ -161,3 +161,70 @@ def test_chained_rename_flood_guard(spark, tmp_path, monkeypatch):
     pl.apply_batch(spark, table, ev, batch_id=0)
     state = table_state(table)
     assert set(state) == {(repo, "c.py")}
+
+
+@pytest.mark.parametrize("shuffle_partitions", [1, 8])
+def test_mixed_rename_batch_matches_oracle(
+    spark, tmp_path, monkeypatch, shuffle_partitions
+):
+    """One batch holding every kind of rename goes through the one
+    resolver: a chain-free rename (delivered twice), a 3-rename swap
+    cycle, a rename of a key deleted earlier in the batch and a rename
+    of a key first upserted earlier in the batch. At 1 shuffle partition
+    all four components share one resolver group; at 8 each has its
+    own. The bound is set to the largest component's candidate count
+    (the swap cycle: lake a, lake b, in-batch a@105), below the group's
+    total of 7, so it must hold per component."""
+    import json
+
+    import ton_etl_spark.cdc.pipeline as pl
+    from ton_etl_spark.datagen import Event, encode_payload
+    from ton_etl_spark.schemas import CHANGE_EVENT_SCHEMA
+
+    repo = "org0/repo0"
+
+    def up(lsn, path):
+        return Event(lsn, "u", "file_upsert", repo, path,
+                     encode_payload(repo, path, lsn, False, False, False),
+                     arrival=float(lsn), ts_ms=lsn)
+
+    def mv(lsn, path, new_path):
+        return Event(lsn, "u", "file_rename", repo, path,
+                     json.dumps({"new_path": new_path}),
+                     arrival=float(lsn), ts_ms=lsn)
+
+    preload = [up(1, "p.py"), up(2, "a.py"), up(3, "b.py"), up(4, "x.py")]
+    batch = [
+        mv(100, "p.py", "q.py"),
+        mv(100, "p.py", "q.py"),  # duplicate delivery
+        up(105, "a.py"),
+        mv(110, "a.py", "t.py"),
+        mv(120, "b.py", "a.py"),
+        mv(130, "t.py", "b.py"),
+        Event(140, "d", "file_delete", repo, "x.py", None,
+              arrival=140.0, ts_ms=140),
+        mv(150, "x.py", "y.py"),  # old key dead: skipped
+        up(160, "u.py"),
+        mv(170, "u.py", "v.py"),
+    ]
+
+    def read_log(name, evs):
+        log_dir = str(tmp_path / name)
+        write_event_log(evs, log_dir, 1)
+        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(log_dir)
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    monkeypatch.setattr(pl, "MAX_CHAIN_PROVENANCE_ROWS", 3)
+    try:
+        table = build_table(spark, str(tmp_path / "lake"), buckets=4)
+        pl.apply_batch(spark, table, read_log("ev0", preload), batch_id=0)
+        res = pl.apply_batch(spark, table, read_log("ev1", batch), batch_id=1)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    assert res["n_renames"] == 7  # rename events, duplicate included
+    assert res["n_chained_renames"] == 3  # the swap cycle
+    expected, _ = oracle_state(preload + batch)
+    assert set(expected) == {(repo, p) for p in ("q.py", "a.py", "b.py", "v.py")}
+    assert table_state(table) == expected

@@ -1,6 +1,5 @@
 """Unit tests for the crosscheck harness itself — the local replica of
-the grading driver's compare must be at least as strict as the driver
-(VERDICT r2/r3 recurring lesson)."""
+the grading driver's compare must be at least as strict as the driver."""
 
 import duckdb
 import pytest
@@ -27,7 +26,7 @@ def test_lint_rejects_hugeint_oracle_columns():
 
 def test_float_normalization_is_exact_repr():
     """%.9g collapsed 9 significant digits and could mask a 6th-decimal
-    mismatch on values with a >=4-digit integer part (VERDICT r3 #2)."""
+    mismatch on values with a >=4-digit integer part."""
     a, b = 1234.1234561, 1234.1234569
     assert f"{a:.9g}" == f"{b:.9g}"          # the old masking behavior
     assert _norm(a) != _norm(b)              # exact repr distinguishes

@@ -94,7 +94,7 @@ def test_silver_enrichment_never_drops_rows_and_replay_converges(
 
 
 def test_preexisting_silver_table_gains_enrichment_columns(spark, tmp_path):
-    """ADVICE r3: constructing an enriched SilverFanout over a silver
+    """Constructing an enriched SilverFanout over a silver
     table CREATED WITHOUT enrichment must not silently drop the
     enrichment output (merge aligns by name). The fanout now syncs the
     opened table's schema with idempotent ADD COLUMN commits."""

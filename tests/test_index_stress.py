@@ -1,7 +1,7 @@
 """Incremental-index stress: >= 20 micro-batches through DedupIndex and
 NearDupIndex with duplicates, redeliveries, and a mid-sequence crash
 between the two index commits, asserting final novel-set equality with
-a single-threaded Python oracle (r4 verdict ask #5).
+a single-threaded Python oracle.
 
 Also bounds the `_bands_version_before` manifest-walk cost: it must
 stay O(1) manifest reads per batch in forward progress (the walk only

@@ -102,8 +102,8 @@ def test_gated_apply_runs_no_extra_jobs(spark, tmp_path):
     """The gate's bookkeeping (max-LSN seen, immature count) rides the
     pipeline's single control-plane aggregation: a gated apply_batch
     must schedule EXACTLY as many Spark jobs as an ungated one on the
-    same input (the r2 design ran a dedicated max-LSN collect — one
-    extra serial driver job per batch)."""
+    same input (a dedicated max-LSN collect would be one extra
+    serial driver job per batch)."""
     from ton_etl_spark.cdc.pipeline import apply_batch
     from ton_etl_spark.schemas import CHANGE_EVENT_SCHEMA
 

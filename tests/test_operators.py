@@ -396,7 +396,7 @@ def test_approx_distinct_within_documented_rsd(spark, sf):
     sketch (default rsd 0.05) must land within 3*rsd of the exact
     per-group distinct count at every test SF. The sketch is
     deterministic for fixed data, so this is a stable bound, not a
-    flaky probabilistic one (VERDICT r3 next-round #7)."""
+    flaky probabilistic one."""
     import os
 
     sf_dir = f"/root/testdata/{sf}"

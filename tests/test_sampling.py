@@ -72,8 +72,8 @@ def test_threshold_edges():
     assert threshold_hex(0.0) == "00000000"
     # fraction 1.0 -> the above-all sentinel: every 8-hex bucket sorts
     # strictly below "g" byte-wise in both Spark and DuckDB, so a full
-    # sample keeps even the "ffffffff" bucket (ADVICE r3: the old
-    # "ffffffff" clamp + strict `<` dropped it)
+    # sample keeps even the "ffffffff" bucket (the old "ffffffff"
+    # clamp + strict `<` dropped it)
     assert threshold_hex(1.0) == "g"
     assert "ffffffff" < threshold_hex(1.0)
     with pytest.raises(ValueError):

@@ -13,8 +13,8 @@ repo AND (b) structurally malformed (unparseable payload JSON) — rows
 the parser would null-and-drop anyway. A well-formed upsert of a
 blacklisted repo always survives, so even a wrong promotion can never
 lose data; the blacklist is purely a decode-work/churn optimization.
-(Round-2's design excluded whole repos and could permanently drop a
-healthy repo's data after an unlucky evidence streak — ADVICE r2.)
+(Excluding whole repos instead could permanently drop a healthy
+repo's data after an unlucky evidence streak.)
 
 Promotion bookkeeping (still conservative, now replay-proof):
 
@@ -75,7 +75,7 @@ class LearnedBlacklist:
         # and NULL propagates through ~(...) into "filtered out" under
         # SQL tri-valued logic — rows the exclusion has no verdict on
         # must be explicitly RETAINED (downstream parsers own them),
-        # not dropped as a side effect (ADVICE r3).
+        # not dropped as a side effect.
         return F.coalesce(
             ~(
                 (F.col("event_type") == "file_upsert")

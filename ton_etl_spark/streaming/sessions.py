@@ -41,7 +41,7 @@ def _q6(v: float) -> int:
     """round(v * 1e6) with Spark's F.round semantics: Spark rounds the
     SHORTEST DECIMAL REPR of the double (BigDecimal.valueOf) HALF_UP —
     Python's built-in round() is half-even and would break the exact
-    stream==batch parity on a 6th-decimal tie (ADVICE r3). Decimal(repr(x))
+    stream==batch parity on a 6th-decimal tie. Decimal(repr(x))
     is the same shortest-repr construction as BigDecimal.valueOf(x)."""
     return int(
         Decimal(repr(v * 1000000.0)).quantize(Decimal(1), ROUND_HALF_UP)
