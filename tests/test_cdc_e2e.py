@@ -8,15 +8,25 @@ sha256(content) equality.
 
 import dataclasses
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from ton_etl_spark.datagen import GenParams, generate_events, write_event_log
+from ton_etl_spark.datagen import (
+    Event,
+    GenParams,
+    generate_events,
+    write_event_log,
+)
 from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.oracle import reduce_events, state_hashes
 from ton_etl_spark.cdc.pipeline import CdcPipeline
-from ton_etl_spark.schemas import REPOS_SCHEMA, REPOS_KEY_FIELDS
+from ton_etl_spark.schemas import (
+    CHANGE_EVENT_SCHEMA,
+    REPOS_KEY_FIELDS,
+    REPOS_SCHEMA,
+)
 
 
 def build_table(spark, root, buckets=16):
@@ -36,6 +46,21 @@ def table_state(table):
         (r["repo"], r["path"]): (r["sha"], tuple(r[c] for c in cols))
         for r in rows
     }
+
+
+def mv(lsn, path, new_path, repo="org0/repo0"):
+    """A file_rename event of `repo`/`path` to `new_path` at `lsn`."""
+    return Event(lsn, "u", "file_rename", repo, path,
+                 json.dumps({"new_path": new_path}),
+                 arrival=float(lsn), ts_ms=lsn)
+
+
+def read_log(spark, tmp_path, name, events):
+    """`events` written as a one-file log under tmp_path/name, read
+    back as the change-event DataFrame `apply_batch` takes."""
+    log_dir = str(tmp_path / name)
+    write_event_log(events, log_dir, 1)
+    return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(log_dir)
 
 
 def oracle_state(events):
@@ -175,22 +200,14 @@ def test_mixed_rename_batch_matches_oracle(
     own. The bound is set to the largest component's candidate count
     (the swap cycle: lake a, lake b, in-batch a@105), below the group's
     total of 7, so it must hold per component."""
-    import json
-
     import ton_etl_spark.cdc.pipeline as pl
-    from ton_etl_spark.datagen import Event, encode_payload
-    from ton_etl_spark.schemas import CHANGE_EVENT_SCHEMA
+    from ton_etl_spark.datagen import encode_payload
 
     repo = "org0/repo0"
 
     def up(lsn, path):
         return Event(lsn, "u", "file_upsert", repo, path,
                      encode_payload(repo, path, lsn, False, False, False),
-                     arrival=float(lsn), ts_ms=lsn)
-
-    def mv(lsn, path, new_path):
-        return Event(lsn, "u", "file_rename", repo, path,
-                     json.dumps({"new_path": new_path}),
                      arrival=float(lsn), ts_ms=lsn)
 
     preload = [up(1, "p.py"), up(2, "a.py"), up(3, "b.py"), up(4, "x.py")]
@@ -208,23 +225,105 @@ def test_mixed_rename_batch_matches_oracle(
         mv(170, "u.py", "v.py"),
     ]
 
-    def read_log(name, evs):
-        log_dir = str(tmp_path / name)
-        write_event_log(evs, log_dir, 1)
-        return spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(log_dir)
-
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     monkeypatch.setattr(pl, "MAX_CHAIN_PROVENANCE_ROWS", 3)
     try:
         table = build_table(spark, str(tmp_path / "lake"), buckets=4)
-        pl.apply_batch(spark, table, read_log("ev0", preload), batch_id=0)
-        res = pl.apply_batch(spark, table, read_log("ev1", batch), batch_id=1)
+        pl.apply_batch(
+            spark, table, read_log(spark, tmp_path, "ev0", preload), batch_id=0
+        )
+        res = pl.apply_batch(
+            spark, table, read_log(spark, tmp_path, "ev1", batch), batch_id=1
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    assert res["n_renames"] == 7  # rename events, duplicate included
+    assert res["n_renames"] == 6  # deduped by lsn: the duplicate counts once
     assert res["n_chained_renames"] == 3  # the swap cycle
     expected, _ = oracle_state(preload + batch)
     assert set(expected) == {(repo, p) for p in ("q.py", "a.py", "b.py", "v.py")}
     assert table_state(table) == expected
+
+
+def test_rename_moves_post_ddl_types_exactly(spark, tmp_path):
+    """Moved content passes through the resolver's Python worker, so
+    its values must come out at the types the schema has after DDL: a
+    `size_bytes` above 2^31 once the column is widened, nulls and a
+    value above 2^53 in a bigint column an `add` DDL created. The
+    sources are lake rows written after the DDL, a lake row written
+    before it (int size, no `stars`) and an upsert earlier in the same
+    batch. One shuffle partition puts every rename in one resolver
+    group, so nulls and the large value share the group's columns."""
+    import base64
+    import zlib
+
+    import ton_etl_spark.cdc.pipeline as pl
+
+    repo = "org0/repo0"
+
+    def up(lsn, path, size, stars=None):
+        obj = {
+            "commit": f"c{lsn}",
+            "lang": "py",
+            "content_z": base64.b64encode(
+                zlib.compress(f"{path}@{lsn}".encode())
+            ).decode(),
+            "size_scale": 0,
+            "size_value": base64.b64encode(
+                size.to_bytes(8, "big", signed=True)
+            ).decode(),
+        }
+        if stars is not None:
+            obj["stars"] = stars
+        return Event(lsn, "u", "file_upsert", repo, path, json.dumps(obj),
+                     arrival=float(lsn), ts_ms=lsn)
+
+    def ddl(lsn, payload):
+        return Event(lsn, "u", "schema_change", None, None,
+                     json.dumps(payload), arrival=float(lsn), ts_ms=lsn)
+
+    big_stars = 2**53 + 1  # not a float64
+    preload = [
+        up(1, "old.py", 10),
+        ddl(2, {"action": "add", "name": "stars", "type": "bigint"}),
+        ddl(3, {"action": "widen", "name": "size_bytes", "type": "bigint"}),
+        up(4, "big.py", 6_000_000_000),  # stars null
+        up(5, "star.py", 3_000_000_000, stars=big_stars),
+    ]
+    batch = [
+        up(10, "fresh.py", 8_000_000_000),  # stars null
+        mv(11, "big.py", "big2.py"),
+        mv(12, "star.py", "star2.py"),
+        mv(13, "fresh.py", "fresh2.py"),
+        mv(14, "old.py", "old2.py"),
+    ]
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        table = build_table(spark, str(tmp_path / "lake"), buckets=4)
+        pl.apply_batch(
+            spark, table, read_log(spark, tmp_path, "ev0", preload), batch_id=0
+        )
+        res = pl.apply_batch(
+            spark, table, read_log(spark, tmp_path, "ev1", batch), batch_id=1
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    assert res["n_renames"] == 4
+    expected, cols = oracle_state(preload + batch)
+    assert "stars" in cols
+    got = table_state(table)
+    assert got == expected
+    sizes = {
+        r["path"]: (r["size_bytes"], r["stars"])
+        for r in table.read().collect()
+    }
+    assert sizes == {
+        "big2.py": (6_000_000_000, None),
+        "star2.py": (3_000_000_000, big_stars),
+        "fresh2.py": (8_000_000_000, None),
+        "old2.py": (10, None),
+    }

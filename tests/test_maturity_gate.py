@@ -18,7 +18,7 @@ from ton_etl_spark.datagen import (
 from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.schemas import REPOS_KEY_FIELDS, REPOS_SCHEMA
 
-from test_cdc_e2e import oracle_state, table_state
+from test_cdc_e2e import mv, oracle_state, read_log, table_state
 
 PARAMS = GenParams(
     n_events=4000,
@@ -130,3 +130,44 @@ def test_gated_apply_runs_no_extra_jobs(spark, tmp_path):
     ungated = count_jobs(False, "u")
     gated = count_jobs(True, "g")
     assert gated == ungated, (gated, ungated)
+
+
+def test_renames_run_few_extra_jobs(spark, tmp_path):
+    """The rename resolver emits the merge rows (old-key deletes,
+    new-key upserts with the moved content) itself, inside the merge
+    action: no persisted candidates, no broadcast of its output, no
+    join back onto the candidates. A batch with 2 renames of preloaded
+    keys may schedule at most 3 Spark jobs more than the same batch
+    without them (the design that fetched the moved content by a join
+    scheduled 7 more)."""
+    from ton_etl_spark.cdc.pipeline import apply_batch
+    from ton_etl_spark.datagen import Event, encode_payload
+
+    repo = "org0/repo0"
+
+    def up(lsn, path):
+        return Event(lsn, "r", "file_upsert", repo, path,
+                     encode_payload(repo, path, lsn, False, False, False),
+                     arrival=float(lsn), ts_ms=lsn)
+
+    preload = read_log(
+        spark, tmp_path, "ev0", [up(i + 1, f"k{i}.py") for i in range(400)]
+    )
+    writes = [up(1000 + i, f"k{i}.py") for i in range(0, 40, 2)]
+    renames = [mv(2000 + i, f"k{i}.py", f"moved{i}.py") for i in (301, 303)]
+
+    def count_jobs(evs, sub: str) -> int:
+        table = LakeTable.create(
+            spark, str(tmp_path / f"lake_{sub}"), REPOS_SCHEMA,
+            REPOS_KEY_FIELDS, "lsn", bucket_count=16,
+        )
+        apply_batch(spark, table, preload, batch_id=0)
+        batch = read_log(spark, tmp_path, f"ev_{sub}", evs)
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        apply_batch(spark, table, batch, batch_id=1)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    plain = count_jobs(writes, "plain")
+    renamed = count_jobs(writes + renames, "renamed")
+    assert renamed - plain <= 3, (renamed, plain)

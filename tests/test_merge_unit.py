@@ -2,9 +2,8 @@
 salting parity, narrow-batch oracle, schema evolution reads."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from ton_etl_spark.lake.merge import dedup_updates, merge_into
+from ton_etl_spark.lake.merge import merge_into
 from ton_etl_spark.lake.table import LakeTable
 from ton_etl_spark.schemas import REPOS_KEY_FIELDS, REPOS_SCHEMA
 
@@ -43,7 +42,7 @@ def live(table):
 # -- dedup ------------------------------------------------------------------
 
 @pytest.mark.parametrize("salt", [None, 4])
-def test_dedup_picks_max_lsn_deterministically(spark, salt):
+def test_dedup_picks_max_lsn_deterministically(spark, tmp_path, salt):
     rows = [
         {"lsn": 5, "op": "u", "content": "v5"},
         {"lsn": 9, "op": "u", "content": "v9"},
@@ -51,15 +50,9 @@ def test_dedup_picks_max_lsn_deterministically(spark, salt):
         {"lsn": 7, "op": "d"},
         {"lsn": 2, "op": "c", "content": "v2"},
     ]
-    df = upd(spark, rows).withColumn(
-        "_op_rank",
-        F.when(F.col("op") == "d", 3).when(F.col("op") == "u", 2)
-        .when(F.col("op") == "c", 1).otherwise(0),
-    ).withColumn("_deleted", F.col("op") == "d")
-    out = dedup_updates(
-        df, ["repo", "path"], "lsn",
-        ["commit", "lang", "content", "size_bytes", "_deleted"], salt=salt,
-    ).collect()
+    t = mk_table(spark, tmp_path)
+    merge_into(t, upd(spark, rows), salt=salt)
+    out = t.read(include_deleted=True).collect()
     assert len(out) == 1
     assert out[0]["lsn"] == 9 and out[0]["content"] == "v9"
 

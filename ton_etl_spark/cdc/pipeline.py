@@ -21,7 +21,7 @@ import os
 import time
 from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..lake.merge import merge_into
 from ..lake.table import LakeTable
@@ -50,13 +50,12 @@ def _apply_ddl(table: LakeTable, ddl_rows: list) -> list[str]:
 # connected set of old/new keys) may feed the resolver. Components are
 # small (a key's writes in this batch plus its one lake row); one that
 # exceeds this is adversarial or misconfigured, and the resolver fails
-# loudly inside the task rather than silently building a giant pandas
-# frame.
+# loudly inside the task rather than silently indexing a giant group.
 MAX_CHAIN_PROVENANCE_ROWS = 1_000_000
 
 
-def _make_chain_resolver(group_renames: dict[int, list]):
-    """Build the sequential rename resolver for applyInPandas.
+def _make_chain_resolver(group_renames: dict[int, list], data_cols: list[str]):
+    """Build the sequential rename resolver for applyInArrow.
     `group_renames` maps group id -> lsn-sorted
     [(repo, path, lsn, new_path), ...] over every component packed into
     that group; it is small (bounded by the control collect) and ships
@@ -67,47 +66,48 @@ def _make_chain_resolver(group_renames: dict[int, list]):
     Semantics (identical to the sequential oracle): the winner of a
     rename is the latest write to its old key with lsn < rename.lsn,
     from candidates or from earlier renames' overlay; a missing/dead
-    old key skips the rename. Emits, per applied rename, a delete row
-    (op='d') for the old key and a mapping row (op='m') whose
-    (repo, path, lsn) is the NEW key at the rename lsn and whose
-    (_sr, _sp, _sl) is the source triple the content is fetched from."""
-    import pandas as pd
+    old key skips the rename. Emits the merge rows themselves, per
+    applied rename: (repo, path, lsn, 'd', nulls...) for the old key
+    and (repo, new_path, lsn, 'u', <winner's `data_cols`>) for the new
+    key. The overlay tracks the winner as a candidate row index, and the
+    moved columns are one Arrow `take` of the input, so every value
+    leaves with the type it came in with (no pandas dtype round trip:
+    a nullable bigint would pass through float64)."""
+    import pyarrow as pa
 
-    cols = ["repo", "path", "lsn", "op", "_sr", "_sp", "_sl"]
     # capture the bound by VALUE: the UDF body runs in worker processes
     # that re-import this module (a module-global read there would not
     # see a driver-side override)
     bound = MAX_CHAIN_PROVENANCE_ROWS
 
-    def resolve(key, pdf):
+    def resolve(key, tbl):
         # the bound is per component, not per group: packing components
         # into fewer groups must not change which batches fail
-        sizes = pdf["_comp"].value_counts()
-        if len(sizes) and sizes.max() > bound:
+        sizes = Counter(tbl.column("_comp").to_pylist()).most_common(1)
+        if sizes and sizes[0][1] > bound:
             raise RuntimeError(
-                f"rename resolution: component {int(sizes.idxmax())} has "
-                f"{int(sizes.max())} candidate provenance rows, above the "
+                f"rename resolution: component {sizes[0][0]} has "
+                f"{sizes[0][1]} candidate provenance rows, above the "
                 f"{bound} bound (chained-rename flood); refusing to build "
-                f"the pandas frame. Split the offending batch (lower "
+                f"the resolver's index. Split the offending batch (lower "
                 f"max_files_per_trigger) or raise "
                 f"MAX_CHAIN_PROVENANCE_ROWS deliberately."
             )
         by_key: dict[tuple, list] = {}
-        for repo, path, lsn, dead in zip(
-            pdf["repo"], pdf["path"], pdf["lsn"], pdf["_dead"]
-        ):
-            by_key.setdefault((repo, path), []).append(
-                (int(lsn), bool(dead))
-            )
+        for i, (repo, path, lsn, dead) in enumerate(zip(
+            *(tbl.column(c).to_pylist() for c in ("repo", "path", "lsn", "_dead"))
+        )):
+            by_key.setdefault((repo, path), []).append((lsn, not dead, i))
+        # (repo, path, lsn, op, winner row index | None)
         rows: list[tuple] = []
-        # key -> (lsn, alive, src_triple | None)
+        # key -> (lsn, alive, winner row index | None)
         overlay: dict[tuple, tuple] = {}
-        for repo, path, L, new_path in group_renames.get(int(key[0]), []):
+        for repo, path, L, new_path in group_renames.get(key[0].as_py(), []):
             old = (repo, path)
-            best = None  # (lsn, alive, (src_repo, src_path, src_lsn))
-            for lsn, dead in by_key.get(old, []):
-                if lsn < L and (best is None or lsn > best[0]):
-                    best = (lsn, not dead, (old[0], old[1], lsn))
+            best = None
+            for cand in by_key.get(old, []):
+                if cand[0] < L and (best is None or cand[0] > best[0]):
+                    best = cand
             ov = overlay.get(old)
             if ov is not None and ov[0] < L and (
                 best is None or ov[0] > best[0]
@@ -115,29 +115,25 @@ def _make_chain_resolver(group_renames: dict[int, list]):
                 best = ov
             if best is None or not best[1]:
                 continue
-            new_key = (repo, new_path)
-            rows.append((old[0], old[1], L, "d", None, None, None))
-            rows.append((new_key[0], new_key[1], L, "m", *best[2]))
+            rows.append((repo, path, L, "d", None))
+            rows.append((repo, new_path, L, "u", best[2]))
             overlay[old] = (L, False, None)
-            overlay[new_key] = (L, True, best[2])
-        if not rows:
-            return pd.DataFrame(
-                {
-                    "repo": pd.Series(dtype="object"),
-                    "path": pd.Series(dtype="object"),
-                    "lsn": pd.Series(dtype="int64"),
-                    "op": pd.Series(dtype="object"),
-                    "_sr": pd.Series(dtype="object"),
-                    "_sp": pd.Series(dtype="object"),
-                    "_sl": pd.Series(dtype="Int64"),
-                }
-            )
-        out = pd.DataFrame(rows, columns=cols)
-        # delete rows carry NULL source lsns; nullable Int64 keeps the
-        # column integral for the Arrow long conversion (plain None
-        # would make it float64 with NaN)
-        out["_sl"] = out["_sl"].astype("Int64")
-        return out
+            overlay[(repo, new_path)] = (L, True, best[2])
+        repos, paths, lsns, ops, idx = (
+            (list(c) for c in zip(*rows)) if rows else [[]] * 5
+        )
+        # a null index takes an all-null row: the delete rows' data
+        moved = tbl.select(data_cols).take(pa.array(idx, pa.int64()))
+        return pa.Table.from_arrays(
+            [
+                pa.array(repos, pa.string()),
+                pa.array(paths, pa.string()),
+                pa.array(lsns, pa.int64()),
+                pa.array(ops, pa.string()),
+                *moved.columns,
+            ],
+            names=["repo", "path", "lsn", "op", *data_cols],
+        )
 
     return resolve
 
@@ -180,7 +176,9 @@ def _rename_candidates(
     keys in `keys_b` (the broadcast per-batch key DataFrame): this
     batch's upserts and deletes of those keys plus their lake state from
     the old keys' buckets, tombstones included so a dead key blocks the
-    rename. `_dead` marks deletes and tombstones."""
+    rename. `_dead` marks deletes and tombstones. The rows carry their
+    data columns, which the resolver moves to the new keys; they are
+    read once, by the resolver, inside the merge action."""
     # semi-join the RAW events before the Arrow decode: a join cannot be
     # pushed below the UDF projection the way a literal filter can, so
     # only the old keys' events are decoded
@@ -208,7 +206,7 @@ def _resolve_renames(
     registry: ParserRegistry,
     rename_rows: list,
     data_cols: list[str],
-) -> tuple[DataFrame | None, int, list[DataFrame]]:
+) -> tuple[DataFrame | None, int, int]:
     """Resolve the batch's renames into synthetic merge rows.
 
     A rename moves the old key's latest pre-rename content to the new
@@ -222,16 +220,17 @@ def _resolve_renames(
     rename rows, with the old key's bucket) are deduped by lsn and split
     into connected key components on the driver. One broadcast
     (repo, path, _comp) DataFrame of old keys narrows the raw events and
-    the lake read to the candidates, then tags the candidates' narrow
-    projection with their component for the sequential resolver, which
-    runs in an applyInPandas over at most `spark.sql.shuffle.partitions`
-    groups (`_comp % n`). The moved content is fetched by one broadcast
-    join of the resolver's (new key -> source triple) mapping against
-    the persisted candidates. Everything is lazy and runs inside the
-    merge action; no content passes through the driver.
+    the lake read to the candidates, then tags them with their component
+    for the sequential resolver, which runs in an applyInArrow over at
+    most `spark.sql.shuffle.partitions` groups (`_comp % n`) and emits
+    the merge rows (old-key deletes, new-key upserts with the moved
+    content) itself. Its output types are the candidates' types, so they
+    follow the schema as DDL changes it. Everything is lazy and runs
+    inside the merge action; no content passes through the driver.
 
-    Returns (synthetic_df | None, n_chained, persisted_frames); the
-    caller unpersists the frames after the merge materializes.
+    Returns (merge_rows | None, n_renames, n_chained): the number of
+    lsn-deduped renames that have a `new_path`, and how many of those
+    share their component with another rename.
     """
     seen, renames = set(), []
     for r in sorted(rename_rows, key=lambda r: r["lsn"]):
@@ -240,7 +239,7 @@ def _resolve_renames(
         seen.add(r["lsn"])
         renames.append(r)
     if not renames:
-        return None, 0, []
+        return None, 0, 0
 
     comp_of, n_chained = _rename_components(renames)
     n_groups = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -257,52 +256,25 @@ def _resolve_renames(
             sorted(old_keys), "repo string, path string, _comp int"
         )
     )
-    # read twice (resolver input, moved-content join); each read would
-    # otherwise re-run the lake scan and the decode of the old keys
     cand = _rename_candidates(
         table, events, registry, keys_b, [r["_bucket"] for r in renames]
-    ).persist()
-    out = (
-        cand.select("repo", "path", "lsn", "_dead")
+    )
+    schema = T.StructType(
+        [
+            T.StructField("repo", T.StringType()),
+            T.StructField("path", T.StringType()),
+            T.StructField("lsn", T.LongType()),
+            T.StructField("op", T.StringType()),
+            *[T.StructField(d, cand.schema[d].dataType) for d in data_cols],
+        ]
+    )
+    rows = (
+        cand.select("repo", "path", "lsn", "_dead", *data_cols)
         .join(keys_b, on=["repo", "path"])
         .groupBy((F.col("_comp") % n_groups).alias("_g"))
-        .applyInPandas(
-            _make_chain_resolver(group_renames),
-            schema="repo string, path string, lsn long, op string, "
-                   "_sr string, _sp string, _sl long",
-        )
-        # read twice below (deletes + mapping); tiny
-        .persist()
+        .applyInArrow(_make_chain_resolver(group_renames, data_cols), schema)
     )
-    synth_del = out.filter(F.col("op") == "d").select(
-        "repo", "path", "lsn", "op"
-    )
-    mdf = F.broadcast(
-        out.filter(F.col("op") == "m").select(
-            F.col("repo").alias("_nr"),
-            F.col("path").alias("_np"),
-            F.col("lsn").alias("_nl"),
-            "_sr", "_sp", "_sl",
-        )
-    )
-    c = cand.alias("c")
-    moved = c.join(
-        mdf,
-        (F.col("c.repo") == F.col("_sr"))
-        & (F.col("c.path") == F.col("_sp"))
-        & (F.col("c.lsn") == F.col("_sl")),
-    ).select(
-        F.col("_nr").alias("repo"),
-        F.col("_np").alias("path"),
-        F.col("_nl").alias("lsn"),
-        F.lit("u").alias("op"),
-        *[F.col(f"c.{d}") for d in data_cols],
-    )
-    # duplicate (repo, path, lsn) candidates (a replayed batch row
-    # already merged into the lake) produce identical moved rows; the
-    # merge's deterministic in-batch dedup absorbs them
-    synth_df = synth_del.unionByName(moved, allowMissingColumns=True)
-    return synth_df, n_chained, [cand, out]
+    return rows, len(renames), n_chained
 
 
 # event types that target the main repos table (everything else is
@@ -498,7 +470,7 @@ def apply_batch(
     ups_ok = ups.filter(~F.col("_malformed")).drop("_malformed")
     dels = reg.route(events, reg.get("file_delete"))
     ren = [r for r in ctl if r["event_type"] == "file_rename"]
-    synth_df, n_chained, ren_persisted = _resolve_renames(
+    synth_df, n_renames, n_chained = _resolve_renames(
         spark, table, events, reg, ren, data_cols
     )
     updates = ups_ok.unionByName(dels, allowMissingColumns=True)
@@ -511,10 +483,6 @@ def apply_batch(
     result = merge_into(
         table, updates, batch_id=batch_id, salt=salt, precomputed=precomputed
     )
-    for p in ren_persisted:
-        # the merge has materialized every plan that reads the rename
-        # candidates / chain output — release the blocks before fan-out
-        p.unpersist()
 
     # silver fan-out + incremental gold maintenance: each table carries
     # its own batch_id guard, so a crash between any two commits heals
@@ -543,7 +511,7 @@ def apply_batch(
         ddl=applied_ddl, salt=salt, t_wall=[t0, time.time()],
         # batch stats come from the control aggregation: no extra jobs
         n_events=row0["n"], n_malformed=row0["n_malformed"],
-        n_renames=len(ren), n_chained_renames=n_chained,
+        n_renames=n_renames, n_chained_renames=n_chained,
     )
     if blacklist is not None:
         result["bl_bad_capped"] = bl_capped

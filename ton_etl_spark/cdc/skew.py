@@ -4,8 +4,9 @@ The reference's only skew story is raising Kafka message limits for
 mega account states (README.md:30-39); the north rule requires explicit
 detection + salting. Detection counts keys exactly over a sample of the
 batch (one aggregation job): any key holding at least `support` of the
-sampled rows triggers two-phase (salted) pre-aggregation in the merge
-(lake/merge.py::dedup_updates). An approximate frequent-items sketch is
+sampled rows triggers the merge's salted phase 1
+(lake/merge.py::dedup_updates), which the union aggregation finishes.
+An approximate frequent-items sketch is
 not used: its surviving counters include false positives, so it fired
 on every uniform batch.
 """

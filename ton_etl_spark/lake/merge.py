@@ -70,16 +70,17 @@ def dedup_updates(
     keys: list[str],
     version_field: str,
     data_cols: list[str],
-    salt: int | None = None,
-    final: bool = True,
+    salt: int,
 ) -> DataFrame:
-    """Collapse an update batch to one winning row per key (or, with
-    final=False and salting active, to <= salt rows per key — a partial
-    pre-aggregation the caller's own aggregation must finish).
+    """Salted phase 1 of the merge for hot keys: shuffle on
+    (key, salt), spreading a mega-key over `salt` reducers, and keep
+    each group's max (lsn, op_rank, ...) row. At most `salt` rows per
+    key survive; the merge's union aggregation finishes the job in its
+    own shuffle.
 
-    Winner = max (lsn, op_rank, ...) — a total, deterministic order, so
-    the result is identical regardless of partitioning/parallelism
-    (required for the N-vs-4N sha256 parity of BASELINE.json).
+    The order is total and deterministic, so the winner is identical
+    regardless of partitioning/parallelism (required for the N-vs-4N
+    sha256 parity of BASELINE.json).
     """
     ordered = F.struct(
         F.col(version_field).alias("_v"),
@@ -87,32 +88,16 @@ def dedup_updates(
         F.col("op").alias("op"),
         *[F.col(c).alias(c) for c in data_cols],
     )
-
-    def expand(df: DataFrame) -> DataFrame:
-        return df.select(
-            *keys,
-            F.col("_w._v").alias(version_field),
-            F.col("_w._r").alias("_op_rank"),
-            F.col("_w.op").alias("op"),
-            *[F.col(f"_w.{c}").alias(c) for c in data_cols],
-        )
-
-    if salt and salt > 1:
-        # explicit two-phase (salted) aggregation for hot keys: phase 1
-        # shuffles on (key, salt) spreading a mega-key over `salt`
-        # reducers. With final=False only phase 1 runs (<= salt rows per
-        # key survive) — the merge aggregation downstream finishes the
-        # job in ITS shuffle, saving a full pass over the batch.
-        salted = updates.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(version_field)), F.lit(salt)).cast("int")
-        )
-        phase1 = expand(
-            salted.groupBy(*keys, "_salt").agg(F.max(ordered).alias("_w"))
-        )
-        if not final:
-            return phase1
-        return expand(phase1.groupBy(*keys).agg(F.max(ordered).alias("_w")))
-    return expand(updates.groupBy(*keys).agg(F.max(ordered).alias("_w")))
+    salted = updates.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col(version_field)), F.lit(salt)).cast("int")
+    )
+    return salted.groupBy(*keys, "_salt").agg(F.max(ordered).alias("_w")).select(
+        *keys,
+        F.col("_w._v").alias(version_field),
+        F.col("_w._r").alias("_op_rank"),
+        F.col("_w.op").alias("op"),
+        *[F.col(f"_w.{c}").alias(c) for c in data_cols],
+    )
 
 
 def batch_stats(rows: Column, bucket: Column) -> Column:
@@ -172,7 +157,7 @@ def merge_into(
         (F.col("op") == "d").alias("_deleted"),
     )
     if salt and salt > 1:
-        batch = dedup_updates(batch, keys, vf, data_cols, salt=salt, final=False)
+        batch = dedup_updates(batch, keys, vf, data_cols, salt)
 
     # batch stats (affected buckets / row bound / LSN range) may be
     # precomputed by the caller from a cheap column-pruned scan of the
