@@ -12,6 +12,7 @@ import dataclasses
 import json
 import os
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -257,3 +258,27 @@ def test_kill_between_file_write_and_manifest_swap(spark, tmp_path, monkeypatch,
     # vacuum removes the dead attempt's files, the commit stays readable
     assert t.vacuum(keep_last=1) >= 1
     assert live(t) == state
+
+
+def test_delta_target_scan_reads_only_keys_and_version(spark, tmp_path,
+                                                       monkeypatch):
+    """A delta emits no target row, so its target scan reads the keys
+    and the version field, never the payload columns."""
+    t = mk_table(spark, tmp_path, buckets=4)
+    narrow = _wide_then_narrow(spark, t)
+    plans = []
+    real = LakeTable._commit_data
+
+    def capture(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_commit_data", capture)
+    assert merge_into(t, narrow, batch_id=2)["mode"] == "delta"
+    phys = {f["name"]: f"f{f['id']}" for f in t.manifest()["fields"]}
+    (read,) = {
+        tuple(c.split(":")[0] for c in s.split(","))
+        for s in re.findall(r"ReadSchema: struct<([^>]*)>", plans[0])
+    }
+    assert set(read) == {phys["repo"], phys["path"], phys["lsn"]}
+    assert live(t)[("r0", "p0")] == (100, "new")

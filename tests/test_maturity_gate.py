@@ -103,8 +103,11 @@ def test_gated_apply_runs_no_extra_jobs(spark, tmp_path):
     pipeline's single control-plane aggregation: a gated apply_batch
     must schedule EXACTLY as many Spark jobs as an ungated one on the
     same input (a dedicated max-LSN collect would be one extra
-    serial driver job per batch)."""
+    serial driver job per batch). The hot-key sketch rides the same
+    aggregation: an apply with a monitor schedules no job to detect,
+    only its salted phase 1's own shuffle stage when a key is hot."""
     from ton_etl_spark.cdc.pipeline import apply_batch
+    from ton_etl_spark.cdc.skew import HotKeyMonitor
     from ton_etl_spark.schemas import CHANGE_EVENT_SCHEMA
 
     p = GenParams(n_events=600, n_repos=8, n_files=2)
@@ -114,22 +117,31 @@ def test_gated_apply_runs_no_extra_jobs(spark, tmp_path):
     ev = spark.read.schema(CHANGE_EVENT_SCHEMA).parquet(log_dir)
     max_lsn = max(e.lsn for e in events)
 
-    def count_jobs(gated: bool, sub: str) -> int:
+    salts = []
+
+    def count_jobs(gated: bool, sub: str, monitor=None) -> int:
         table = LakeTable.create(
             spark, str(tmp_path / f"lake_{sub}"), REPOS_SCHEMA,
             REPOS_KEY_FIELDS, "lsn", bucket_count=8,
         )
         tracker = spark.sparkContext.statusTracker()
         before = set(tracker.getJobIdsForGroup(None))
-        apply_batch(
+        res = apply_batch(
             spark, table, ev, batch_id=0,
             mature_lsn=max_lsn if gated else None, gated=gated,
+            monitor=monitor,
         )
+        salts.append(res["salt"])
         return len(set(tracker.getJobIdsForGroup(None)) - before)
 
     ungated = count_jobs(False, "u")
     gated = count_jobs(True, "g")
     assert gated == ungated, (gated, ungated)
+    # 30% of the log hits 2 hot keys: the monitor salts, and the salted
+    # phase 1 is one more shuffle stage (AQE runs each as its own job)
+    monitored = count_jobs(False, "m", HotKeyMonitor(REPOS_KEY_FIELDS))
+    assert salts == [None, None, 16]
+    assert monitored == ungated + 1, (monitored, ungated)
 
 
 def test_renames_run_few_extra_jobs(spark, tmp_path):

@@ -396,6 +396,8 @@ def apply_batch(
         # failures on valid JSON (corrupt zlib payload) are still
         # nulled+filtered by the parser but are not in this count.
         F.count(F.when(is_up & bad_json, 1)).alias("n_malformed"),
+        # hot-key sketch: the merge's salting decision costs no job
+        *([monitor.sketch(is_data).alias("_hot")] if monitor is not None else []),
         *bl_evidence,
         # which event types are present (skips fan-out work per batch)
         # and the mature-side max LSN (gold recompute version)
@@ -477,8 +479,10 @@ def apply_batch(
     if synth_df is not None:
         updates = updates.unionByName(synth_df, allowMissingColumns=True)
 
-    # 3. hot-key detection -> salted dedup
-    salt = monitor.salt_for(events) if monitor is not None else None
+    # 3. hot keys (sketched by the control aggregation) -> salted merge
+    salt = (
+        monitor.salt_for(row0["_hot"], row0["n"]) if monitor is not None else None
+    )
 
     result = merge_into(
         table, updates, batch_id=batch_id, salt=salt, precomputed=precomputed

@@ -190,7 +190,6 @@ def main() -> None:
         spark, wtable, wlog, os.path.join(work, "warmup_cp"),
         max_files_per_trigger=wfiles,   # ONE warmup batch, measured-size
     )
-    wpipe.monitor.refresh_every = 1000
     wpipe.run_streaming(available_now=True)
 
     table = LakeTable.create(
@@ -201,7 +200,6 @@ def main() -> None:
         spark, table, log_dir, os.path.join(work, "cp"),
         max_files_per_trigger=mft,
     )
-    pipe.monitor.refresh_every = 1000
     sampler = CpuSampler().start()
     t0 = time.time()
     pipe.run_streaming(available_now=True)

@@ -18,9 +18,11 @@ aggregation, `groupBy(keys).max(struct(lsn, _src, _op_rank, data...))`,
 picks the winner per key. `_src` ranks target rows above batch rows, so
 an equal LSN keeps the target (the strict guard). Map-side partial
 aggregation collapses a key's duplicates before the shuffle. For
-detected hot keys a salted phase 1 runs first (north rule skew
-handling): it collapses (key, salt) groups, spreading a mega-key over
-`salt` reducers, and the union aggregation finishes the job.
+detected hot keys (cdc/skew.py) the batch side first runs a salted
+phase 1 (north rule skew handling): it takes the max of the same struct
+per (key, salt) group, spreading a mega-key over `salt` reducers, and
+the union aggregation finishes the job. One order decides both phases,
+so a salted merge writes what an unsalted one does.
 
 The target side is every stored row of the affected buckets: base
 files and the delta files still covering them, unresolved, since the
@@ -29,7 +31,10 @@ aggregation resolves anyway. Its result is written one of two ways:
   * delta (merge-on-read): when the batch's row bound is below the
     affected buckets' base rows, only the rows the batch won (`_s = 0`,
     tombstones included) are appended as unbucketed delta files. The
-    write then scales with the batch, not with the buckets it touches.
+    write then scales with the batch, not with the buckets it touches,
+    and the target side is read as (keys, lsn) only: a batch row only
+    has to beat the stored row's version, whose payload is never
+    emitted.
   * rewrite (copy-on-write): otherwise, or once the table's delta rows
     reach its base rows, every affected bucket is rewritten and its
     deltas are folded. The aggregation's output is hash-partitioned on
@@ -63,41 +68,6 @@ def _aligned_columns(table: LakeTable, m: dict, updates: DataFrame):
     keys, vf = m["key_fields"], m["version_field"]
     data = [c for n, c in cols.items() if n not in keys and n != vf]
     return [cols[k] for k in keys], cols[vf], data
-
-
-def dedup_updates(
-    updates: DataFrame,
-    keys: list[str],
-    version_field: str,
-    data_cols: list[str],
-    salt: int,
-) -> DataFrame:
-    """Salted phase 1 of the merge for hot keys: shuffle on
-    (key, salt), spreading a mega-key over `salt` reducers, and keep
-    each group's max (lsn, op_rank, ...) row. At most `salt` rows per
-    key survive; the merge's union aggregation finishes the job in its
-    own shuffle.
-
-    The order is total and deterministic, so the winner is identical
-    regardless of partitioning/parallelism (required for the N-vs-4N
-    sha256 parity of BASELINE.json).
-    """
-    ordered = F.struct(
-        F.col(version_field).alias("_v"),
-        F.col("_op_rank").alias("_r"),
-        F.col("op").alias("op"),
-        *[F.col(c).alias(c) for c in data_cols],
-    )
-    salted = updates.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(version_field)), F.lit(salt)).cast("int")
-    )
-    return salted.groupBy(*keys, "_salt").agg(F.max(ordered).alias("_w")).select(
-        *keys,
-        F.col("_w._v").alias(version_field),
-        F.col("_w._r").alias("_op_rank"),
-        F.col("_w.op").alias("op"),
-        *[F.col(f"_w.{c}").alias(c) for c in data_cols],
-    )
 
 
 def batch_stats(rows: Column, bucket: Column) -> Column:
@@ -151,20 +121,17 @@ def merge_into(
     batch = updates.select(
         *key_cols,
         vf_col,
-        F.col("op").alias("op"),
         op_rank.alias("_op_rank"),
         *data,
         (F.col("op") == "d").alias("_deleted"),
     )
-    if salt and salt > 1:
-        batch = dedup_updates(batch, keys, vf, data_cols, salt)
 
     # batch stats (affected buckets / row bound / LSN range) may be
     # precomputed by the caller from a cheap column-pruned scan of the
     # RAW events (no payload decode) — then the decoded batch flows
     # straight into the merge plan without any materialization.
     if precomputed is not None:
-        return _union_merge(table, m, batch, data_cols, precomputed, batch_id)
+        return _union_merge(table, m, batch, data_cols, precomputed, batch_id, salt)
     batch = batch.persist()
     try:
         stats = batch.agg(
@@ -173,7 +140,9 @@ def merge_into(
             F.max(vf).alias("lsn_max"),
             F.collect_set(table.bucket_expr(m)).alias("buckets"),
         ).collect()[0]
-        return _union_merge(table, m, batch, data_cols, stats.asDict(), batch_id)
+        return _union_merge(
+            table, m, batch, data_cols, stats.asDict(), batch_id, salt
+        )
     finally:
         batch.unpersist()
 
@@ -185,6 +154,7 @@ def _union_merge(
     data_cols: list[str],
     stats: dict,
     batch_id: int | None,
+    salt: int | None,
 ) -> dict:
     """Resolve `batch` against its affected buckets with the union
     aggregation and commit the batch's winners as a delta, or the
@@ -202,13 +172,20 @@ def _union_merge(
     )
 
     # raw rows: tombstones participate so the LSN guard protects deleted
-    # keys, and superseded rows simply lose the aggregation
+    # keys, and superseded rows simply lose the aggregation. A delta
+    # emits no target row, so the batch only has to beat the target's
+    # (lsn, _src): its data columns are typed nulls, and the scan reads
+    # just the keys and the version field.
+    types = table._logical_schema(m, True)
     t_side = table._raw(m, affected)[0].select(
         *keys,
         vf,
         F.lit(1).alias("_src"),  # tie on lsn -> target wins (strict guard)
         F.lit(0).alias("_op_rank"),
-        *data_cols,
+        *[
+            F.lit(None).cast(types[c].dataType).alias(c) if delta else c
+            for c in data_cols
+        ],
     )
     u_side = batch.select(*keys, vf, F.lit(0).alias("_src"), "_op_rank", *data_cols)
     ordered = F.struct(
@@ -216,8 +193,16 @@ def _union_merge(
         F.col("_src").alias("_s"),
         F.col("_op_rank").alias("_r"),
         *[F.col(c).alias(c) for c in data_cols],
-    )
-    won = t_side.unionByName(u_side).groupBy(*keys).agg(F.max(ordered).alias("_w"))
+    ).alias("_w")
+    t_side, u_side = t_side.select(*keys, ordered), u_side.select(*keys, ordered)
+    if salt and salt > 1:
+        # salted phase 1 for hot keys: (key, salt) groups spread a
+        # mega-key over `salt` reducers; at most `salt` rows per key
+        # survive into the union aggregation, under the same order
+        u_side = u_side.groupBy(
+            *keys, F.pmod(F.xxhash64("_w._v"), F.lit(salt)).alias("_salt")
+        ).agg(F.max("_w").alias("_w")).drop("_salt")
+    won = t_side.unionByName(u_side).groupBy(*keys).agg(F.max("_w").alias("_w"))
     if delta:
         won = won.filter(F.col("_w._s") == 0)
     resolved = won.select(
